@@ -2,12 +2,16 @@
 re-expressed on Spark 4's Python Data Source API (pure Python: no JDBC jar).
 
 Read path (reference A1-A7):
-- ``read_sql(spark, db, table=...)`` — full-table scan, rowid-range
-  partitioned so executors read disjoint slices in parallel
+- ``read_sql(spark, db, table=...)`` — lazy full-table scan through the
+  ``sqlite`` data source, rowid-range partitioned so executors read disjoint
+  slices in parallel, with filter pushdown
   (DataFrame.init(connection:table:), SQLiteDataFrame.swift:248-253).
-- ``read_sql(spark, db, statement=...)`` — arbitrary SQL scan, single
-  partition (the statement is SQLite's to plan; :295-304). Parameter binding
-  via ``params`` mirrors the prepared-statement entry point (:346-397).
+- ``read_sql(spark, db, statement=...)`` — arbitrary SQL (A2) and the
+  prepared statement with ``params`` binds (A3, :346-397) are a driver
+  snapshot: the statement runs once when ``read_sql()`` is called, as in the
+  reference (:295-304), and its rows become an Arrow-backed in-memory
+  DataFrame held by the JVM — no data source, no Python worker, no second
+  execution.
 - Schema inference: decltype -> affinity -> typed column, caller ``types``
   override, ``columns`` allowlist, ``.any`` fallback (:354-394, §1.3).
 - Cell decode incl. bool !=0, 3-format dates, `.any`->string (:432-531).
@@ -34,6 +38,7 @@ import re
 import sqlite3
 from collections.abc import Iterator, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     DataSource,
@@ -42,6 +47,7 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from sqlitedataframe_spark.errors import (
@@ -49,7 +55,7 @@ from sqlitedataframe_spark.errors import (
     TableExistsError,
     UnknownColumnError,
 )
-from sqlitedataframe_spark.session import tune
+from sqlitedataframe_spark.session import ensure_worker_imports, tune
 from sqlitedataframe_spark.sqlite_types import (
     SQLiteType,
     affinity,
@@ -75,6 +81,43 @@ def _connect(path: str) -> sqlite3.Connection:
 
 
 # ===========================================================================
+# Cell decode into Arrow (shared by the table reader and statement reads)
+# ===========================================================================
+def _decode_batch(
+    rows: list[tuple],
+    cols: Sequence[tuple[int, SQLiteType]],
+    any_mode: str,
+    arrow_schema: pa.Schema,
+) -> pa.RecordBatch:
+    """Decode ``rows`` column by column: result position ``i`` decoded as
+    type ``t`` for each ``(i, t)`` of ``cols``. Naive datetimes go into the
+    UTC timestamp type as UTC wall clock, so instants never depend on the
+    process time zone."""
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([decode_cell(r[i], t, any_mode) for r in rows], type=field.type)
+            for (i, t), field in zip(cols, arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+
+
+def _fetch_batches(
+    cur: sqlite3.Cursor,
+    head: list[tuple],
+    cols: Sequence[tuple[int, SQLiteType]],
+    any_mode: str,
+    arrow_schema: pa.Schema,
+) -> Iterator[pa.RecordBatch]:
+    """``head`` (rows already fetched) and the rest of ``cur``, decoded in
+    batches of ``_MIN_ROWS_PER_PARTITION`` rows."""
+    rows = head + cur.fetchmany(_MIN_ROWS_PER_PARTITION - len(head))
+    while rows:
+        yield _decode_batch(rows, cols, any_mode, arrow_schema)
+        rows = cur.fetchmany(_MIN_ROWS_PER_PARTITION)
+
+
+# ===========================================================================
 # Python Data Source
 # ===========================================================================
 class SQLiteRangePartition(InputPartition):
@@ -86,9 +129,8 @@ class SQLiteRangePartition(InputPartition):
 class SQLiteReader(DataSourceReader):
     def __init__(self, options: dict, schema: StructType):
         self.path = options["path"]
-        self.table = options.get("table")
-        self.statement = options.get("statement")
-        self.params = json.loads(options.get("params") or "[]")
+        self.table = options["table"]
+        self.rowid_alias = options.get("rowid_alias")
         self.columns = json.loads(options["columns"])
         self.types = {k: SQLiteType(v) for k, v in json.loads(options["types"]).items()}
         self.num_partitions = int(options.get("num_partitions") or _DEFAULT_READ_PARTITIONS)
@@ -111,12 +153,11 @@ class SQLiteReader(DataSourceReader):
     def pushFilters(self, filters):  # noqa: N802 (Spark API name)
         self.pushed_sql: list[str] = []
         self.pushed_params: list = []
-        if self.table:
-            for f in filters:
-                frag = self._translate_filter(f)
-                if frag is not None:
-                    self.pushed_sql.append(frag[0])
-                    self.pushed_params.extend(frag[1])
+        for f in filters:
+            frag = self._translate_filter(f)
+            if frag is not None:
+                self.pushed_sql.append(frag[0])
+                self.pushed_params.extend(frag[1])
         # Everything is re-applied by Spark (superset contract above).
         return filters
 
@@ -140,6 +181,8 @@ class SQLiteReader(DataSourceReader):
             return None
         q = "rowid" if col == "rowid" else f'"{col}"'
         t = SQLiteType.INT if col == "rowid" else self.types.get(col, SQLiteType.ANY)
+        # rowid and its INTEGER PRIMARY KEY alias hold only integers
+        key = t is SQLiteType.INT and col in ("rowid", self.rowid_alias)
         dirty = f"typeof({q}) IN ('text', 'blob')"  # rows Spark must judge
         if name == "IsNotNull":
             # decoded non-null implies storage non-null for every type
@@ -150,18 +193,14 @@ class SQLiteReader(DataSourceReader):
             return f"{q} IS NULL", []
         if t in (SQLiteType.INT, SQLiteType.FLOAT):
             cast = "INTEGER" if t is SQLiteType.INT else "REAL"
-            guard = "" if col == "rowid" else f"{dirty} OR "
+            # a key compares bare, so SQLite searches the rowid B-tree
+            # instead of scanning every row through the CAST
+            lhs = q if key else f"{dirty} OR CAST({q} AS {cast})"
             if name in self._OPS:
-                return (
-                    f"({guard}CAST({q} AS {cast}) {self._OPS[name]} ?)",
-                    [encode_cell(f.value)],
-                )
+                return f"({lhs} {self._OPS[name]} ?)", [encode_cell(f.value)]
             if name == "In" and f.value:
                 marks = ", ".join("?" for _ in f.value)
-                return (
-                    f"({guard}CAST({q} AS {cast}) IN ({marks}))",
-                    [encode_cell(v) for v in f.value],
-                )
+                return f"({lhs} IN ({marks}))", [encode_cell(v) for v in f.value]
             return None
         if t is SQLiteType.TEXT:
             # equality/prefix only: SQLite orders TEXT by UTF-8 bytes,
@@ -188,10 +227,9 @@ class SQLiteReader(DataSourceReader):
         return None  # DATE (3-format decode), BLOB, ANY: Spark-side only
 
     def partitions(self) -> Sequence[InputPartition]:
-        # Table scans split the rowid keyspace into disjoint ranges so each
-        # executor core reads its own slice; statement scans are one cursor
-        # (SQLite plans the statement — nothing to split).
-        if self.table and self.rowid_min is not None and self.rowid_max is not None:
+        # Split the rowid keyspace into disjoint ranges so each executor
+        # core reads its own slice.
+        if self.rowid_min is not None and self.rowid_max is not None:
             lo, hi = int(self.rowid_min), int(self.rowid_max)
             span = hi - lo + 1
             cap = self.num_partitions
@@ -207,8 +245,6 @@ class SQLiteReader(DataSourceReader):
         return [SQLiteRangePartition(None, None)]
 
     def _query(self, partition: SQLiteRangePartition) -> tuple[str, list]:
-        if self.statement:
-            return self.statement, list(self.params)
         cols = ", ".join(f'"{c}"' if c != "rowid" else "rowid" for c in self.columns)
         q = f'SELECT {cols} FROM "{self.table}"'
         where: list[str] = []
@@ -222,20 +258,16 @@ class SQLiteReader(DataSourceReader):
             return q + " WHERE " + " AND ".join(where), params
         return q, []
 
-    def read(self, partition: SQLiteRangePartition) -> Iterator[tuple]:
+    def read(self, partition: SQLiteRangePartition) -> Iterator[pa.RecordBatch]:
+        # The query selects self.columns in order, so cells are decoded by
+        # position: SQLite names a selected rowid after its INTEGER PRIMARY
+        # KEY alias, if the table has one.
+        cols = [(i, self.types.get(c, SQLiteType.ANY)) for i, c in enumerate(self.columns)]
+        arrow_schema = to_arrow_schema(spark_schema(self.columns, self.types, self.any_mode))
         conn = _connect(self.path)
         try:
             q, params = self._query(partition)
-            cur = conn.execute(q, params)
-            names = [d[0] for d in cur.description]
-            # statement path: project the allowlisted columns post-fetch by
-            # position (reference :354-363 — unknown names silently ignored)
-            idx = [names.index(c) for c in self.columns]
-            ts = [self.types.get(c, SQLiteType.ANY) for c in self.columns]
-            for row in cur:
-                yield tuple(
-                    decode_cell(row[i], t, self.any_mode) for i, t in zip(idx, ts)
-                )
+            yield from _fetch_batches(conn.execute(q, params), [], cols, self.any_mode, arrow_schema)
         finally:
             conn.close()
 
@@ -301,53 +333,46 @@ class SQLiteDataSource(DataSource):
 
 
 def _register(spark: SparkSession) -> None:
-    try:
-        spark.dataSource.register(SQLiteDataSource)
-    except Exception:
-        pass  # already registered
+    """Register the data source once per session.
+
+    A registration snapshots the context's python includes, so the package
+    zip is shipped first: workers then import this module whatever the
+    driver's cwd."""
+    if getattr(spark, "_sdf_sqlite_registered", False):
+        return
+    ensure_worker_imports(spark)
+    spark.dataSource.register(SQLiteDataSource)
+    spark._sdf_sqlite_registered = True
 
 
 # ===========================================================================
 # Schema inference (reference A4, §1.3)
 # ===========================================================================
-def _table_decltypes(conn: sqlite3.Connection, table: str) -> dict[str, str]:
-    cur = conn.execute(f'PRAGMA table_info("{table}")')
-    return {r[1]: r[2] for r in cur.fetchall()}
+def _rowid_alias(conn: sqlite3.Connection, table: str, info: list[tuple]) -> str | None:
+    """The column that aliases the rowid, if any: the table's only
+    primary-key column, declared exactly ``INTEGER``, with no index behind
+    the key (a WITHOUT ROWID table and ``INTEGER PRIMARY KEY DESC`` both
+    carry a 'pk' index and no alias)."""
+    pks = [r for r in info if r[5]]
+    if len(pks) != 1 or (pks[0][2] or "").upper() != "INTEGER":
+        return None
+    if any(r[3] == "pk" for r in conn.execute(f'PRAGMA index_list("{table}")')):
+        return None
+    return pks[0][1]
 
 
-def _statement_columns_and_sniff(
-    conn: sqlite3.Connection, statement: str, params
-) -> tuple[list[str], dict[str, SQLiteType]]:
-    """Column names AND sampled runtime types from ONE driver-side execution.
+#: sqlite3 storage class -> the type a sampled cell implies.
+_SNIFFED = {int: SQLiteType.INT, float: SQLiteType.FLOAT, bytes: SQLiteType.BLOB}
 
-    The reference reads both from the prepared statement without re-running
-    it (sqlite3_column_name / sqlite3_column_type); the Python driver only
-    exposes them through an executed cursor, so grab cursor.description and
-    the first 100 rows' storage classes together — the user's statement runs
-    exactly once on the driver before the partitioned read (it may be
-    expensive or non-idempotent; VERDICT r1 "What's wrong" #3).
 
-    A sampled tag refines .any to the concrete type; NULL-only stays .any
+def _sniff(cells) -> SQLiteType:
+    """Type of the first non-NULL sampled cell; NULL-only stays .any
     (SQLite's dynamic typing makes any inference per-statement — reference
-    falls back to .any, SQLiteDataFrame.swift:373).
-    """
-    cur = conn.execute(statement, params or [])
-    names = [d[0] for d in cur.description or []]
-    sniffed: dict[str, SQLiteType] = {}
-    for row in cur.fetchmany(100):
-        for n, v in zip(names, row):
-            if n in sniffed or v is None:
-                continue
-            if isinstance(v, bool) or isinstance(v, int):
-                sniffed[n] = SQLiteType.INT
-            elif isinstance(v, float):
-                sniffed[n] = SQLiteType.FLOAT
-            elif isinstance(v, (bytes, bytearray)):
-                sniffed[n] = SQLiteType.BLOB
-            else:
-                sniffed[n] = SQLiteType.TEXT
-    cur.close()
-    return names, sniffed
+    falls back to .any, SQLiteDataFrame.swift:373)."""
+    for v in cells:
+        if v is not None:
+            return _SNIFFED.get(type(v), SQLiteType.TEXT)
+    return SQLiteType.ANY
 
 
 def _catalog_decltypes(conn: sqlite3.Connection) -> dict[str, str]:
@@ -397,6 +422,12 @@ def read_sql(
     the same type-resolution priority: caller override -> decltype affinity
     -> .any (:364-374).
 
+    A table read is lazy: every action scans the table again, partitioned by
+    rowid range (``num_partitions``) with Spark filters pushed into SQLite.
+    A statement read is a snapshot: the statement runs exactly once, here,
+    and the result is held in memory like the reference's (one partition
+    per 10k rows; ``num_partitions`` does not apply).
+
     ``any_mode`` controls how dynamically typed (`.any`) cells materialize:
     ``"string"`` (default, SURVEY §1.4 lossless-string policy) or
     ``"struct"`` — the tagged union ``ANY_STRUCT_TYPE`` mirroring the
@@ -409,80 +440,111 @@ def read_sql(
     if any_mode not in ("string", "struct"):
         raise ValueError("any_mode must be 'string' or 'struct'")
     tune(spark)
-    _register(spark)
     overrides = {
         k: (SQLiteType(v) if isinstance(v, str) else v) for k, v in (types or {}).items()
     }
+    if statement is not None:
+        return _read_statement(spark, db_path, statement, params, columns, overrides, any_mode)
 
     conn = _connect(db_path)
     try:
-        rowid_min = rowid_max = None
-        if table is not None:
-            decls = _table_decltypes(conn, table)
-            if not decls:
-                raise SQLiteOperationalError(f"no such table: {table}")
-            all_names = list(decls)
-            if columns:
-                # table path: unknown requested columns are an error
-                # (reference contract :214-220); rowid is the implicit PK.
-                unknown = [c for c in columns if c not in decls and c != "rowid"]
-                if unknown:
-                    raise UnknownColumnError(f"unknown columns {unknown} in table {table!r}")
-                names = list(columns)
-            else:
-                names = all_names
-            col_types = {
-                n: overrides.get(n, SQLiteType.INT if n == "rowid" else affinity(decls.get(n)))
-                for n in names
-            }
-            row = conn.execute(f'SELECT MIN(rowid), MAX(rowid) FROM "{table}"').fetchone()
-            if row and row[0] is not None:
-                rowid_min, rowid_max = int(row[0]), int(row[1])
+        info = conn.execute(f'PRAGMA table_info("{table}")').fetchall()
+        if not info:
+            raise SQLiteOperationalError(f"no such table: {table}")
+        decls = {r[1]: r[2] for r in info}
+        if columns:
+            # table path: unknown requested columns are an error
+            # (reference contract :214-220); rowid is the implicit PK.
+            unknown = [c for c in columns if c not in decls and c != "rowid"]
+            if unknown:
+                raise UnknownColumnError(f"unknown columns {unknown} in table {table!r}")
+            names = list(columns)
         else:
-            stmt_names, sniffed = _statement_columns_and_sniff(conn, statement, params)
-            if columns:
-                # statement path: allowlist filters result columns, unknown
-                # names silently ignored (reference :354-363).
-                names = [c for c in columns if c in stmt_names]
-            else:
-                names = stmt_names
-            decls = _catalog_decltypes(conn)
-            # resolution priority (reference :364-374): caller override ->
-            # decltype affinity (rowid is the implicit INTEGER PK) -> runtime
-            # sniff -> .any
-            col_types = {}
-            for n in names:
-                if n in overrides:
-                    col_types[n] = overrides[n]
-                elif n == "rowid":
-                    col_types[n] = SQLiteType.INT
-                elif n in decls and affinity(decls[n]) is not SQLiteType.ANY:
-                    col_types[n] = affinity(decls[n])
-                else:
-                    col_types[n] = sniffed.get(n, SQLiteType.ANY)
+            names = list(decls)
+        col_types = {
+            n: overrides.get(n, SQLiteType.INT if n == "rowid" else affinity(decls.get(n)))
+            for n in names
+        }
+        alias = _rowid_alias(conn, table, info)
+        rowid_range = conn.execute(f'SELECT MIN(rowid), MAX(rowid) FROM "{table}"').fetchone()
     finally:
         conn.close()
 
+    _register(spark)
     reader = (
         spark.read.format("sqlite")
         .option("path", db_path)
-        .option("columns", json.dumps(list(names)))
+        .option("table", table)
+        .option("columns", json.dumps(names))
         .option("types", json.dumps({k: v.value for k, v in col_types.items()}))
         .option("num_partitions", str(num_partitions or _DEFAULT_READ_PARTITIONS))
         .option("auto_partitions", "0" if num_partitions else "1")
         .option("any_mode", any_mode)
     )
-    if table is not None:
-        reader = reader.option("table", table)
-        if rowid_min is not None:
-            reader = reader.option("rowid_min", str(rowid_min)).option(
-                "rowid_max", str(rowid_max)
-            )
-    else:
-        reader = reader.option("statement", statement)
-        if params:
-            reader = reader.option("params", json.dumps(list(params)))
+    if alias is not None:
+        reader = reader.option("rowid_alias", alias)
+    if rowid_range and rowid_range[0] is not None:
+        reader = reader.option("rowid_min", str(rowid_range[0])).option(
+            "rowid_max", str(rowid_range[1])
+        )
     return reader.load()
+
+
+def _read_statement(
+    spark: SparkSession,
+    db_path: str,
+    statement: str,
+    params: Sequence | None,
+    columns: Sequence[str] | None,
+    overrides: dict[str, SQLiteType],
+    any_mode: str,
+) -> DataFrame:
+    """Run ``statement`` once and return its rows as an in-memory DataFrame.
+
+    The reference reads column names and runtime types from the prepared
+    statement it then steps (sqlite3_column_name / sqlite3_column_type); here
+    the names come from the cursor's description and the runtime types from
+    its first rows, and the same cursor is read to the end. The statement may
+    be expensive or non-idempotent, so it never runs a second time.
+    """
+    conn = _connect(db_path)
+    try:
+        cur = conn.execute(statement, list(params or []))
+        result_names = [d[0] for d in cur.description or []]
+        # allowlist filters result columns, unknown names silently ignored
+        # (reference :354-363); cells are taken by position
+        if columns:
+            picked = [(result_names.index(c), c) for c in columns if c in result_names]
+        else:
+            picked = list(enumerate(result_names))
+        head = cur.fetchmany(100)  # the sample that types untyped columns
+        decls = _catalog_decltypes(conn)
+        # resolution priority (reference :364-374): caller override ->
+        # decltype affinity (rowid is the implicit INTEGER PK) -> runtime
+        # sniff -> .any
+        col_types: dict[str, SQLiteType] = {}
+        for i, n in picked:
+            if n in overrides:
+                col_types[n] = overrides[n]
+            elif n == "rowid":
+                col_types[n] = SQLiteType.INT
+            elif affinity(decls.get(n)) is not SQLiteType.ANY:
+                col_types[n] = affinity(decls[n])
+            else:
+                col_types[n] = _sniff(r[i] for r in head)
+        schema = spark_schema([n for _, n in picked], col_types, any_mode)
+        arrow_schema = to_arrow_schema(schema)
+        cols = [(i, col_types[n]) for i, n in picked]
+        batches = list(_fetch_batches(cur, head, cols, any_mode, arrow_schema))
+    finally:
+        conn.close()
+    if not batches:
+        # createDataFrame needs one chunk per column, even an empty one
+        batches = [_decode_batch([], cols, any_mode, arrow_schema)]
+    df = spark.createDataFrame(pa.Table.from_batches(batches), schema=schema)
+    # an in-memory relation is split across every core; a result that
+    # fits one fetch batch stays one partition, like a small table read
+    return df.coalesce(1) if len(batches) == 1 else df
 
 
 _IF_EXISTS = ("fail", "ignore", "replace", "append")
@@ -546,6 +608,8 @@ def write_sql(
             finally:
                 conn.close()
 
+        # the closure refers to this module's helpers by reference
+        ensure_worker_imports(df.sparkSession)
         df.select(*cols).foreachPartition(run_partition)
         return
 

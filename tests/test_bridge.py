@@ -246,7 +246,15 @@ def test_statement_runs_once_on_driver(spark, tasks_db, monkeypatch):
     stmt = "SELECT description, done FROM tasks"
     df = read_sql(spark, tasks_db, statement=stmt)
     assert executed.count(stmt) == 1  # driver-side: exactly one execution
-    assert df.count() > 0
+    # the result is a snapshot: no action runs the statement again, in
+    # this process or in a worker (emptying the table would show it)
+    conn = sqlite3.connect(tasks_db)
+    with conn:
+        conn.execute("DELETE FROM tasks")
+    conn.close()
+    assert df.count() == 3
+    assert len(df.collect()) == 3
+    assert executed.count(stmt) == 1
 
 
 def test_bind_param_count_ignores_literals():
@@ -351,9 +359,10 @@ def test_pushdown_translation_units():
     # IsNull only safe on TEXT
     assert r._translate_filter(dsf.IsNull(("i",))) is None
     assert r._translate_filter(dsf.IsNull(("s",))) == ("\"s\" IS NULL", [])
-    # rowid is always clean: no typeof guard
+    # rowid holds only integers: compared bare (no CAST, no typeof guard)
+    # so SQLite can search the rowid B-tree
     frag = r._translate_filter(dsf.LessThan(("rowid",), 10))
-    assert frag == ("(CAST(rowid AS INTEGER) < ?)", [10])
+    assert frag == ("(rowid < ?)", [10])
     # pushFilters returns EVERY filter (Spark re-applies: superset contract)
     # while the translated fragments land in the partition queries
     fs = [dsf.GreaterThan(("i",), 5), dsf.EqualTo(("d",), 1)]
@@ -397,3 +406,202 @@ def test_pushdown_results_match_dirty_storage(spark, db_path):
     # conjunction of pushable + unpushable filters ('7' < 'a': only
     # "alphabet" survives the unpushed string-range predicate)
     assert df.filter((F.col("i") > 5) & (F.col("s") > "a")).count() == 1
+
+
+# ---------------------------------------------------------------------------
+# statement reads are driver snapshots; table reads stay lazy
+# ---------------------------------------------------------------------------
+_JAN1_UNIX = 1609495200  # 2021-01-01 10:00:00 UTC
+
+
+def _mixed_db(path):
+    """One table holding every storage mess the decoder handles. ``late`` is
+    NULL in the first 100 rows, so a statement read's sample leaves it .any;
+    ``v`` is untyped with mixed storage classes from the first row on."""
+    conn = sqlite3.connect(path)
+    conn.execute(
+        "CREATE TABLE mix (id INTEGER PRIMARY KEY, i INT, f REAL, s TEXT, "
+        "bl BLOB, bo BOOL, d DATE, v, late)"
+    )
+    julian = _JAN1_UNIX / 86400.0 + 2440587.5
+    special = [
+        # TEXT-in-INT, REAL-in-TEXT, TEXT- and INT-in-BLOB, 3-format DATE
+        ("42abc", 2.5, 3.25, "x", 1, "2021-01-01 10:00:00", 7),
+        (7, "3.5x", 9, b"\x00\xff", 0, _JAN1_UNIX, 2.5),
+        (None, b"\x01", None, 7, 2.5, julian, "word"),
+        (-3, None, "z", None, "yes", None, b"\x01\x02"),
+        (1, 0.0, "", b"", None, "not a date", None),
+    ]
+    rows = [(k, k * 0.5, f"s{k}", bytes([k]), k % 2, k * 86400, k) for k in range(100)]
+    conn.executemany(
+        "INSERT INTO mix (i, f, s, bl, bo, d, v) VALUES (?, ?, ?, ?, ?, ?, ?)", special + rows
+    )
+    # beyond int64: INTEGER affinity stores the literal as REAL, decoded NULL
+    conn.execute("INSERT INTO mix (i, v, late) VALUES (18446744073709551616, NULL, 5)")
+    conn.executemany(
+        "INSERT INTO mix (late) VALUES (?)", [(1.5,), ("t",), (b"\x09",), (None,)]
+    )
+    conn.commit()
+    conn.close()
+
+
+@pytest.mark.parametrize("any_mode", ["string", "struct"])
+def test_statement_read_matches_table_read(spark, db_path, monkeypatch, any_mode):
+    """A statement read decodes on the driver, a table read in workers: the
+    same table must come back identical, schema included, whatever the
+    process time zone."""
+    import time
+
+    _mixed_db(db_path)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        types = {"v": "any"}  # untyped and mixed: .any on both paths
+        table = read_sql(spark, db_path, table="mix", types=types, any_mode=any_mode)
+        stmt = read_sql(
+            spark, db_path, statement="SELECT * FROM mix", types=types, any_mode=any_mode
+        )
+        assert stmt.schema == table.schema
+        got = {r.id: r for r in stmt.collect()}
+        assert got == {r.id: r for r in table.collect()}
+        assert len(got) == 110
+        assert stmt.rdd.getNumPartitions() == 1  # below 10k rows
+
+        # instants are UTC wall clock on both paths, not process-local time
+        micros = F.unix_micros("d").alias("us")
+        for df in (stmt, table):
+            us = {r.id: r.us for r in df.select("id", micros).collect()}
+            assert us[1] == us[2] == _JAN1_UNIX * 10**6
+            assert abs(us[3] - _JAN1_UNIX * 10**6) < 1000  # Julian REAL
+            assert us[4] is None and us[5] is None
+        assert got[1].i == 42 and got[2].f == 3.5 and got[3].f is None
+        assert got[106].i is None  # beyond int64
+        assert got[1].s == "3.25" and got[1].bl == b"x" and got[3].bl == b"7"
+        assert got[3].bo is True and got[4].bo is None
+
+        empty = read_sql(
+            spark, db_path, statement="SELECT * FROM mix WHERE 0", types=types, any_mode=any_mode
+        )
+        assert empty.schema == table.schema
+        assert empty.count() == 0 and empty.collect() == []
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_rowid_column_on_integer_primary_key(spark, db_path):
+    """SQLite names a selected rowid after its INTEGER PRIMARY KEY alias;
+    the table reader projects by position, so the names do not matter."""
+    exec_sql(
+        db_path,
+        "CREATE TABLE k (id INTEGER PRIMARY KEY, v TEXT);"
+        "INSERT INTO k VALUES (3, 'c'), (1, 'a'), (2, 'b');",
+    )
+    df = read_sql(spark, db_path, table="k", columns=["rowid", "v", "id"])
+    assert df.columns == ["rowid", "v", "id"]
+    assert sorted(map(tuple, df.collect())) == [(1, "a", 1), (2, "b", 2), (3, "c", 3)]
+    assert [tuple(r) for r in df.filter(F.col("rowid") == 2).collect()] == [(2, "b", 2)]
+
+
+def test_rowid_alias_filters_search_the_rowid_btree(spark, db_path):
+    from pyspark.sql import datasource as dsf
+
+    from sqlitedataframe_spark.sources.sqlite import (
+        SQLiteRangePartition,
+        SQLiteReader,
+        _rowid_alias,
+    )
+
+    exec_sql(
+        db_path,
+        "CREATE TABLE k (id INTEGER PRIMARY KEY, n INT);"
+        "CREATE TABLE desc_pk (id INTEGER PRIMARY KEY DESC, n INT);"
+        "CREATE TABLE no_rowid (id INTEGER PRIMARY KEY, n INT) WITHOUT ROWID;"
+        "CREATE TABLE int_pk (id INT PRIMARY KEY, n INT);"
+        "CREATE TABLE two_pk (id INTEGER, n INTEGER, PRIMARY KEY (id, n));"
+        "WITH RECURSIVE c(x) AS (SELECT 1 UNION ALL SELECT x + 1 FROM c WHERE x < 500)"
+        "  INSERT INTO k SELECT x, x % 7 FROM c;",
+    )
+    conn = sqlite3.connect(db_path)
+    try:
+        def alias(t):
+            return _rowid_alias(conn, t, conn.execute(f"PRAGMA table_info({t})").fetchall())
+
+        assert alias("k") == "id"
+        assert [alias(t) for t in ("desc_pk", "no_rowid", "int_pk", "two_pk")] == [None] * 4
+
+        r = SQLiteReader(
+            {
+                "path": db_path,
+                "table": "k",
+                "rowid_alias": "id",
+                "columns": json.dumps(["id", "n"]),
+                "types": json.dumps({"id": "int", "n": "int"}),
+            },
+            None,
+        )
+        assert r._translate_filter(dsf.EqualTo(("id",), 5)) == ('("id" = ?)', [5])
+        assert r._translate_filter(dsf.In(("id",), (1, 2))) == ('("id" IN (?, ?))', [1, 2])
+        # an ordinary INT column keeps the guard
+        assert "typeof" in r._translate_filter(dsf.EqualTo(("n",), 5))[0]
+        for f in (dsf.EqualTo(("id",), 5), dsf.In(("id",), (5, 9)), dsf.EqualTo(("rowid",), 5)):
+            r.pushFilters([f])
+            q, params = r._query(SQLiteRangePartition(None, None))
+            plan = " ".join(row[3] for row in conn.execute("EXPLAIN QUERY PLAN " + q, params))
+            assert "SEARCH k USING INTEGER PRIMARY KEY" in plan, plan
+    finally:
+        conn.close()
+
+    df = read_sql(spark, db_path, table="k")
+    assert [tuple(r) for r in df.filter(F.col("id") == 9).collect()] == [(9, 2)]
+    assert df.filter(F.col("id").isin(3, 4, 999)).count() == 2
+    assert df.filter(F.col("id") < 11).count() == 10
+
+
+def test_data_source_registered_once(spark, tasks_db, monkeypatch):
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    read_sql(spark, tasks_db, table="tasks")
+    calls = []
+    monkeypatch.setattr(DataSourceRegistration, "register", lambda *a: calls.append(a))
+    read_sql(spark, tasks_db, table="tasks").collect()
+    write_sql(_frame(spark), tasks_db, table="again")
+    read_sql(spark, tasks_db, statement="SELECT 1 AS one").collect()
+    assert calls == []
+
+
+def test_workers_import_the_package_from_any_cwd(tmp_path):
+    """A driver started outside the repository, with no PYTHONPATH: table
+    reads, table writes and the DML sink run in Python workers, which must
+    still import this package."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "drive.py"
+    script.write_text(
+        f"""
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from sqlitedataframe_spark.sources.sqlite import exec_sql, read_sql, write_sql
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.driver.memory", "1g").getOrCreate())
+exec_sql("w.db", "CREATE TABLE kv (k INTEGER PRIMARY KEY, v TEXT)")
+df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+write_sql(df, "w.db", table="t")
+write_sql(df, "w.db", statement="INSERT INTO kv VALUES (?, ?)")
+got = [sorted(map(tuple, read_sql(spark, "w.db", table=t).collect())) for t in ("t", "kv")]
+print("RESULT", got)
+spark.stop()
+"""
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert "RESULT [[(1, 'a'), (2, 'b')], [(1, 'a'), (2, 'b')]]" in out.stdout, out.stderr[-3000:]
