@@ -22,6 +22,14 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, in whole GiB (at least 1g). A heap
+    sized past the host lets the kernel OOM-kill the JVM before Java can
+    raise an OutOfMemoryError."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys // 2**31)}g"
+
+
 def get_spark(app_name: str = "sqlitedataframe-spark", cpus: int | None = None) -> SparkSession:
     """Build a local SparkSession sized for this machine (tests / bench)."""
     n = int(cpus or default_parallelism())
@@ -39,11 +47,15 @@ def get_spark(app_name: str = "sqlitedataframe-spark", cpus: int | None = None) 
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    return spark
+    # tune adds the knobs the builder leaves out (the top-k sort fallback)
+    return tune(spark)
 
 
 def tune(spark: SparkSession) -> SparkSession:
@@ -78,9 +90,11 @@ def tune(spark: SparkSession) -> SparkSession:
             conf.set("spark.sql.shuffle.partitions", str(default_parallelism()))
     except Exception:
         pass
-    # Parquet TIMESTAMP(NANOS) (the events fixture) has no Spark type; read
-    # as long nanos and convert in io.load_table.
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # A sort + limit above this k plans as a full sort and a limit, not
+    # TakeOrderedAndProject: its per-task top-k buffer holds 2·k slots, so
+    # a caller's huge k (top_k=10**9) would run the heap out whatever its
+    # size. Below the threshold the bounded top-k stays.
+    conf.set("spark.sql.execution.topKSortFallbackThreshold", "1000000")
     try:
         conf.set("spark.sql.autoBroadcastJoinThreshold", BROADCAST_THRESHOLD)
     except Exception:

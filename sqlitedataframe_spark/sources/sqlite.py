@@ -16,39 +16,37 @@ Read path (reference A1-A7):
   override, ``columns`` allowlist, ``.any`` fallback (:354-394, §1.3).
 - Cell decode incl. bool !=0, 3-format dates, `.any`->string (:432-531).
 
-Write path (reference A8-A11):
-- ``write_sql(df, db, table=..., if_exists=...)`` — DDL generation from the
-  Spark schema (:741-771) + partition-parallel batched INSERTs; the four
-  exists-policies map 1:1 to Spark SaveMode (:197-206).
-- ``write_sql(df, db, statement=...)`` — arbitrary parameterized DML executed
+Write path (reference A8-A11), one worker sink for every form:
+- ``write_sql(df, db, statement=...)`` — arbitrary parameterized DML run once
   per row (positional binds; extra params NULL, extra columns truncated —
-  :572-591) via foreachPartition.
+  :572-591), partition-parallel via foreachPartition.
+- ``write_sql(df, db, table=..., if_exists=...)`` — DDL generated from the
+  Spark schema (:741-771) on the driver, then the statement sink with the
+  generated ``INSERT`` (:773-775); the four exists-policies map 1:1 to Spark
+  SaveMode (:197-206).
+- ``upsert_sql`` — the statement sink with ``INSERT ... ON CONFLICT``.
 
 Scale note: a single SQLite file is an inherently single-node sink/source;
-the bridge parallelizes reads via rowid ranges and batches writes per
-partition inside one transaction (the reference steps one row per implicit
-transaction — its known perf cliff, §3). On a cluster the db file must be on
-a shared filesystem; the parquet path is the 100 TB path.
+the bridge parallelizes reads via rowid ranges and commits writes in
+transactions of ``_WRITE_BATCH`` rows (the reference steps one row per
+implicit transaction — its known perf cliff, §3). On a cluster the db file
+must be on a shared filesystem; the parquet path is the 100 TB path.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import re
 import sqlite3
 from collections.abc import Iterator, Sequence
+from itertools import islice
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, TimestampType
 
 from sqlitedataframe_spark.errors import (
     SQLiteOperationalError,
@@ -133,8 +131,7 @@ class SQLiteReader(DataSourceReader):
         self.rowid_alias = options.get("rowid_alias")
         self.columns = json.loads(options["columns"])
         self.types = {k: SQLiteType(v) for k, v in json.loads(options["types"]).items()}
-        self.num_partitions = int(options.get("num_partitions") or _DEFAULT_READ_PARTITIONS)
-        self.auto_partitions = options.get("auto_partitions") == "1"
+        self.num_partitions = options.get("num_partitions")
         self.rowid_min = options.get("rowid_min")
         self.rowid_max = options.get("rowid_max")
         self.any_mode = options.get("any_mode") or "string"
@@ -232,10 +229,11 @@ class SQLiteReader(DataSourceReader):
         if self.rowid_min is not None and self.rowid_max is not None:
             lo, hi = int(self.rowid_min), int(self.rowid_max)
             span = hi - lo + 1
-            cap = self.num_partitions
-            if self.auto_partitions:
+            if self.num_partitions:
+                cap = int(self.num_partitions)
+            else:
                 # default sizing: no slice narrower than _MIN_ROWS_PER_PARTITION
-                cap = min(cap, span // _MIN_ROWS_PER_PARTITION or 1)
+                cap = min(_DEFAULT_READ_PARTITIONS, span // _MIN_ROWS_PER_PARTITION or 1)
             n = max(1, min(cap, span))
             step = (hi - lo + 1 + n - 1) // n
             return [
@@ -272,49 +270,9 @@ class SQLiteReader(DataSourceReader):
             conn.close()
 
 
-class SQLiteCommit(WriterCommitMessage):
-    pass
-
-
-class SQLiteWriter(DataSourceWriter):
-    def __init__(self, options: dict, schema: StructType):
-        self.path = options["path"]
-        self.table = options["table"]
-        self.columns = [f.name for f in schema.fields]
-
-    def write(self, rows: Iterator) -> SQLiteCommit:
-        # Partition-parallel batched INSERT inside one transaction per batch:
-        # the scalable replacement for the reference's one-step-per-row loop
-        # (SQLiteDataFrame.swift:579-590). Writers serialize on SQLite's file
-        # lock; busy_timeout makes that safe.
-        conn = _connect(self.path)
-        try:
-            placeholders = ", ".join("?" for _ in self.columns)
-            cols = ", ".join(f'"{c}"' for c in self.columns)
-            stmt = f'INSERT INTO "{self.table}" ({cols}) VALUES ({placeholders})'
-            batch = []
-            for row in rows:
-                batch.append(tuple(encode_cell(v) for v in row))
-                if len(batch) >= _WRITE_BATCH:
-                    with conn:
-                        conn.executemany(stmt, batch)
-                    batch = []
-            if batch:
-                with conn:
-                    conn.executemany(stmt, batch)
-        finally:
-            conn.close()
-        return SQLiteCommit()
-
-    def commit(self, messages):  # noqa: D102 — sink has no global commit step
-        return None
-
-    def abort(self, messages):  # noqa: D102
-        return None
-
-
 class SQLiteDataSource(DataSource):
-    """``spark.read.format("sqlite")`` / ``df.write.format("sqlite")``."""
+    """``spark.read.format("sqlite")``: the lazy table read. Read-only —
+    every write goes through the worker sink of ``write_sql``."""
 
     @classmethod
     def name(cls) -> str:
@@ -327,9 +285,6 @@ class SQLiteDataSource(DataSource):
 
     def reader(self, schema: StructType) -> SQLiteReader:
         return SQLiteReader(self.options, schema)
-
-    def writer(self, schema: StructType, overwrite: bool) -> SQLiteWriter:
-        return SQLiteWriter(self.options, schema)
 
 
 def _register(spark: SparkSession) -> None:
@@ -373,6 +328,20 @@ def _sniff(cells) -> SQLiteType:
         if v is not None:
             return _SNIFFED.get(type(v), SQLiteType.TEXT)
     return SQLiteType.ANY
+
+
+def _column_type(
+    name: str, overrides: dict[str, SQLiteType], decls: dict[str, str], sample=()
+) -> SQLiteType:
+    """Resolution priority (reference :364-374): caller override -> rowid
+    (the implicit INTEGER PK) -> decltype affinity -> runtime sniff of the
+    ``sample`` cells -> .any. Table reads pass no sample."""
+    if name in overrides:
+        return overrides[name]
+    if name == "rowid":
+        return SQLiteType.INT
+    t = affinity(decls.get(name))
+    return t if t is not SQLiteType.ANY else _sniff(sample)
 
 
 def _catalog_decltypes(conn: sqlite3.Connection) -> dict[str, str]:
@@ -461,10 +430,7 @@ def read_sql(
             names = list(columns)
         else:
             names = list(decls)
-        col_types = {
-            n: overrides.get(n, SQLiteType.INT if n == "rowid" else affinity(decls.get(n)))
-            for n in names
-        }
+        col_types = {n: _column_type(n, overrides, decls) for n in names}
         alias = _rowid_alias(conn, table, info)
         rowid_range = conn.execute(f'SELECT MIN(rowid), MAX(rowid) FROM "{table}"').fetchone()
     finally:
@@ -477,10 +443,10 @@ def read_sql(
         .option("table", table)
         .option("columns", json.dumps(names))
         .option("types", json.dumps({k: v.value for k, v in col_types.items()}))
-        .option("num_partitions", str(num_partitions or _DEFAULT_READ_PARTITIONS))
-        .option("auto_partitions", "0" if num_partitions else "1")
         .option("any_mode", any_mode)
     )
+    if num_partitions:
+        reader = reader.option("num_partitions", str(num_partitions))
     if alias is not None:
         reader = reader.option("rowid_alias", alias)
     if rowid_range and rowid_range[0] is not None:
@@ -519,19 +485,9 @@ def _read_statement(
             picked = list(enumerate(result_names))
         head = cur.fetchmany(100)  # the sample that types untyped columns
         decls = _catalog_decltypes(conn)
-        # resolution priority (reference :364-374): caller override ->
-        # decltype affinity (rowid is the implicit INTEGER PK) -> runtime
-        # sniff -> .any
-        col_types: dict[str, SQLiteType] = {}
-        for i, n in picked:
-            if n in overrides:
-                col_types[n] = overrides[n]
-            elif n == "rowid":
-                col_types[n] = SQLiteType.INT
-            elif affinity(decls.get(n)) is not SQLiteType.ANY:
-                col_types[n] = affinity(decls[n])
-            else:
-                col_types[n] = _sniff(r[i] for r in head)
+        col_types = {
+            n: _column_type(n, overrides, decls, (r[i] for r in head)) for i, n in picked
+        }
         schema = spark_schema([n for _, n in picked], col_types, any_mode)
         arrow_schema = to_arrow_schema(schema)
         cols = [(i, col_types[n]) for i, n in picked]
@@ -573,6 +529,46 @@ def _bind_param_count(statement: str) -> int:
     return _NON_BINDING_SQL.sub("", statement).count("?")
 
 
+def _utc_cell(value):
+    """A ``TimestampType`` cell arrives as the worker's local wall clock;
+    store the instant's UTC wall clock, as reads take stored text as UTC."""
+    return None if value is None else encode_cell(value.astimezone(dt.timezone.utc))
+
+
+def _run_sink(df: DataFrame, db_path: str, statement: str) -> None:
+    """The one write core: run ``statement`` for every row of ``df`` in the
+    Python workers, binding the row's cells by position. Extra statement
+    params bind NULL, extra columns are dropped (reference :572-591).
+
+    Each task encodes ``_WRITE_BATCH`` rows before it takes SQLite's file
+    lock, then commits them with one ``executemany`` transaction, so tasks
+    encode in parallel and only the commits queue on the lock. A statement
+    that returns rows (``SELECT``) is refused by ``executemany`` and raises.
+    """
+    n_params = _bind_param_count(statement)
+    encoders = [
+        _utc_cell if isinstance(f.dataType, TimestampType) else encode_cell
+        for f in df.schema.fields
+    ][:n_params]
+    pad = [None] * (n_params - len(encoders))
+
+    def write_partition(rows: Iterator) -> None:
+        conn = _connect(db_path)
+        try:
+            while batch := [
+                [enc(v) for enc, v in zip(encoders, row)] + pad
+                for row in islice(rows, _WRITE_BATCH)
+            ]:
+                with conn:
+                    conn.executemany(statement, batch)
+        finally:
+            conn.close()
+
+    # the closure refers to this module's helpers by reference
+    ensure_worker_imports(df.sparkSession)
+    df.foreachPartition(write_partition)
+
+
 def write_sql(
     df: DataFrame,
     db_path: str,
@@ -583,65 +579,49 @@ def write_sql(
     """Write a DataFrame to SQLite.
 
     Table form (reference A10/A11, :721-776): generate DDL from the Spark
-    schema and bulk-insert, honoring if_exists in {fail, ignore, replace,
-    append} = Spark SaveMode {errorifexists, ignore, overwrite, append}.
+    schema, honoring if_exists in {fail, ignore, replace, append} = Spark
+    SaveMode {errorifexists, ignore, overwrite, append}, then insert every
+    row with the generated ``INSERT INTO "t" ("c1", ...) VALUES (?, ...)``
+    through the statement form (:773-775).
 
     Statement form (reference A8, :572-591): execute an arbitrary
-    parameterized DML per row with positional binds; extra statement params
-    bind NULL, extra DataFrame columns are dropped.
+    parameterized DML once per row with positional binds; extra statement
+    params bind NULL, extra DataFrame columns are dropped. A statement that
+    returns rows, such as ``SELECT ?``, raises.
+
+    Both forms commit every ``_WRITE_BATCH`` rows of a partition, so a failed
+    job leaves the batches committed before the failure. ``TimestampType``
+    cells are stored as UTC wall clock, whatever the process time zone.
     """
     if (table is None) == (statement is None):
         raise ValueError("exactly one of table= or statement= is required")
 
-    if statement is not None:
-        n_params = _bind_param_count(statement)
-        cols = df.columns
-
-        def run_partition(rows):
-            conn = _connect(db_path)
-            try:
+    if table is not None:
+        if if_exists not in _IF_EXISTS:
+            raise ValueError(f"if_exists must be one of {_IF_EXISTS}")
+        conn = _connect(db_path)
+        try:
+            exists = _exists(conn, table)
+            if exists:
+                if if_exists == "fail":
+                    raise TableExistsError(f"table {table!r} already exists")
+                if if_exists == "ignore":
+                    return
+                if if_exists == "replace":
+                    with conn:
+                        conn.execute(f'DROP TABLE "{table}"')
+                    exists = False
+            if not exists:
+                decls = ", ".join(ddl_decl(f) for f in df.schema.fields)
                 with conn:
-                    for row in rows:
-                        vals = [encode_cell(v) for v in row]
-                        bound = (vals + [None] * n_params)[:n_params]
-                        conn.execute(statement, bound)
-            finally:
-                conn.close()
+                    conn.execute(f'CREATE TABLE "{table}" ({decls})')
+        finally:
+            conn.close()
+        cols = ", ".join(f'"{c}"' for c in df.columns)
+        marks = ", ".join("?" for _ in df.columns)
+        statement = f'INSERT INTO "{table}" ({cols}) VALUES ({marks})'
 
-        # the closure refers to this module's helpers by reference
-        ensure_worker_imports(df.sparkSession)
-        df.select(*cols).foreachPartition(run_partition)
-        return
-
-    if if_exists not in _IF_EXISTS:
-        raise ValueError(f"if_exists must be one of {_IF_EXISTS}")
-    conn = _connect(db_path)
-    try:
-        exists = _exists(conn, table)
-        if exists:
-            if if_exists == "fail":
-                raise TableExistsError(f"table {table!r} already exists")
-            if if_exists == "ignore":
-                return
-            if if_exists == "replace":
-                with conn:
-                    conn.execute(f'DROP TABLE "{table}"')
-                exists = False
-        if not exists:
-            decls = ", ".join(ddl_decl(f) for f in df.schema.fields)
-            with conn:
-                conn.execute(f'CREATE TABLE "{table}" ({decls})')
-    finally:
-        conn.close()
-
-    _register(df.sparkSession)
-    (
-        df.write.format("sqlite")
-        .mode("append")
-        .option("path", db_path)
-        .option("table", table)
-        .save()
-    )
+    _run_sink(df, db_path, statement)
 
 
 def upsert_sql(df: DataFrame, db_path: str, table: str, key_cols: Sequence[str]) -> None:
@@ -652,7 +632,8 @@ def upsert_sql(df: DataFrame, db_path: str, table: str, key_cols: Sequence[str])
     :541-545; this is the composed idiom).
 
     Requires a UNIQUE index / PK on ``key_cols`` (SQLite's ON CONFLICT
-    contract). Executes partition-parallel, batched in transactions.
+    contract). Runs on the same partition-parallel sink as ``write_sql``,
+    committing every ``_WRITE_BATCH`` rows.
     """
     cols = df.columns
     missing = [k for k in key_cols if k not in cols]

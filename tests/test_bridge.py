@@ -280,6 +280,88 @@ def test_write_statement_with_question_in_literal(spark, tmp_path):
     assert rows == [("why?", "hello"), ("why?", "world")]
 
 
+def test_table_write_stores_what_the_statement_sink_stores(spark, tmp_path):
+    """A table write is the generated DDL plus the statement sink with the
+    generated INSERT (reference :773-775): both forms store every cell with
+    the same storage class and value, NULLs included."""
+    from decimal import Decimal
+
+    from sqlitedataframe_spark.sqlite_types import ANY_STRUCT_TYPE
+
+    db = str(tmp_path / "parity.db")
+    exec_sql(
+        db,
+        "CREATE TABLE mixed (id INTEGER PRIMARY KEY, v);"
+        "INSERT INTO mixed VALUES (1, 42), (2, 2.5), (3, 'word'), (4, x'0102'), (5, NULL);",
+    )
+    anys = read_sql(spark, db, table="mixed", any_mode="struct")
+    assert anys.schema["v"].dataType == ANY_STRUCT_TYPE
+    ts = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    typed = spark.createDataFrame(
+        [
+            (1, 7, 1.5, "x", b"\x00\x01", True, ts, dt.date(2024, 1, 2), Decimal(10**20), [1, 2]),
+            (2, -1, -0.25, "", b"", False, ts, dt.date(1999, 12, 31), Decimal(5), []),
+        ]
+        + [(k, None, None, None, None, None, None, None, None, None) for k in (3, 4, 5)],
+        "id long, l long, d double, s string, b binary, bo boolean, ts timestamp, "
+        "dt date, dec decimal(38,0), arr array<long>",
+    )
+    df = typed.join(anys, "id")
+    write_sql(df, db, table="by_table")
+    conn = sqlite3.connect(db)
+    ddl = conn.execute("SELECT sql FROM sqlite_master WHERE name = 'by_table'").fetchone()[0]
+    conn.execute(ddl.replace('"by_table"', '"by_stmt"'))
+    conn.commit()
+    names = ", ".join(f'"{c}"' for c in df.columns)
+    marks = ", ".join("?" for _ in df.columns)
+    write_sql(df, db, statement=f"INSERT INTO by_stmt ({names}) VALUES ({marks})")
+
+    cells = ", ".join(f'typeof("{c}"), "{c}"' for c in df.columns)
+    by_table, by_stmt = (
+        sorted(conn.execute(f"SELECT {cells} FROM {t}").fetchall()) for t in ("by_table", "by_stmt")
+    )
+    conn.close()
+    assert by_table == by_stmt
+    utc = ("text", "2024-01-01 00:00:00")  # the instant's UTC wall clock
+    nulls = ("null", None) * 9
+    assert by_table == [
+        ("integer", 1, "integer", 7, "real", 1.5, "text", "x", "blob", b"\x00\x01",
+         "integer", 1, *utc, "text", "2024-01-02 00:00:00",
+         "text", "100000000000000000000", "text", "[1, 2]", "integer", 42),
+        ("integer", 2, "integer", -1, "real", -0.25, "text", "", "blob", b"",
+         "integer", 0, *utc, "text", "1999-12-31 00:00:00",
+         "integer", 5, "text", "[]", "real", 2.5),
+        ("integer", 3, *nulls, "text", "word"),
+        ("integer", 4, *nulls, "blob", b"\x01\x02"),
+        ("integer", 5, *nulls, "null", None),
+    ]
+
+
+def test_dml_sink_applies_every_row_once_across_batches(spark, db_path):
+    """One partition of more than _WRITE_BATCH rows commits in several
+    executemany batches; every row is applied exactly once."""
+    from sqlitedataframe_spark.sources.sqlite import _WRITE_BATCH
+
+    n = 2 * _WRITE_BATCH + 7
+    exec_sql(db_path, "CREATE TABLE log (k INT, v TEXT)")
+    df = spark.range(n).selectExpr("id AS k", "CAST(id AS STRING) AS v").coalesce(1)
+    assert df.rdd.getNumPartitions() == 1
+    write_sql(df, db_path, statement="INSERT INTO log (k, v) VALUES (?, ?)")
+    conn = sqlite3.connect(db_path)
+    got = conn.execute(
+        "SELECT COUNT(*), COUNT(DISTINCT k), MIN(k), MAX(k), SUM(CAST(v AS INT) = k) FROM log"
+    ).fetchone()
+    conn.close()
+    assert got == (n, n, 0, n - 1, n)
+
+
+def test_statement_sink_refuses_a_row_returning_statement(spark, db_path):
+    """The sink runs the statement through executemany, which refuses a
+    statement that returns rows (the old per-row loop ran and ignored it)."""
+    df = spark.createDataFrame([(1,)], ["a"])
+    with pytest.raises(Exception, match="DML"):
+        write_sql(df, db_path, statement="SELECT ?")
+
 # -- runtime-typed .any cells (reference SQLiteValue parity) ------------------
 def test_any_struct_mode_roundtrip(spark, tmp_path):
     """A decltype-less column holding four storage classes reads as the
@@ -573,7 +655,9 @@ def test_data_source_registered_once(spark, tasks_db, monkeypatch):
 def test_workers_import_the_package_from_any_cwd(tmp_path):
     """A driver started outside the repository, with no PYTHONPATH: table
     reads, table writes and the DML sink run in Python workers, which must
-    still import this package."""
+    still import this package. The process time zone is not UTC: both write
+    forms store a timestamp as the instant's UTC wall clock, and a read
+    gives the same instant back."""
     import os
     import subprocess
     import sys
@@ -584,24 +668,36 @@ def test_workers_import_the_package_from_any_cwd(tmp_path):
         f"""
 import sys
 sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession
+import sqlite3
+from pyspark.sql import SparkSession, functions as F
 from sqlitedataframe_spark.sources.sqlite import exec_sql, read_sql, write_sql
 
 spark = (SparkSession.builder.master("local[1]")
          .config("spark.ui.enabled", "false")
          .config("spark.driver.memory", "1g").getOrCreate())
-exec_sql("w.db", "CREATE TABLE kv (k INTEGER PRIMARY KEY, v TEXT)")
-df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+exec_sql("w.db", "CREATE TABLE kv (k INTEGER PRIMARY KEY, v TEXT, ts DATE)")
+df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string").withColumn(
+    "ts", F.timestamp_seconds(F.lit(1704067200) + F.col("k")))
 write_sql(df, "w.db", table="t")
-write_sql(df, "w.db", statement="INSERT INTO kv VALUES (?, ?)")
-got = [sorted(map(tuple, read_sql(spark, "w.db", table=t).collect())) for t in ("t", "kv")]
+write_sql(df, "w.db", statement="INSERT INTO kv VALUES (?, ?, ?)")
+conn = sqlite3.connect("w.db")
+print("STORED", [conn.execute(f"SELECT ts FROM {{t}} ORDER BY k").fetchall() for t in ("t", "kv")])
+got = [
+    sorted(map(tuple, read_sql(spark, "w.db", table=t)
+                      .select("k", "v", F.unix_seconds("ts")).collect()))
+    for t in ("t", "kv")
+]
 print("RESULT", got)
 spark.stop()
 """
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["TZ"] = "America/New_York"
     out = subprocess.run(
         [sys.executable, str(script)], cwd=tmp_path, env=env,
         capture_output=True, text=True, timeout=600,
     )
-    assert "RESULT [[(1, 'a'), (2, 'b')], [(1, 'a'), (2, 'b')]]" in out.stdout, out.stderr[-3000:]
+    stored = [("2024-01-01 00:00:01",), ("2024-01-01 00:00:02",)]
+    assert f"STORED {[stored, stored]}" in out.stdout, out.stderr[-3000:]
+    rows = [(1, "a", 1704067201), (2, "b", 1704067202)]
+    assert f"RESULT {[rows, rows]}" in out.stdout, out.stderr[-3000:]

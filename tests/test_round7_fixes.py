@@ -90,6 +90,21 @@ def test_neighbor_jaccard_hub_cap_flat_at_scale(spark):
     assert capped.count() == 0
 
 
+def test_top_k_above_threshold_plans_sort_and_limit(spark):
+    """A limit above spark.sql.execution.topKSortFallbackThreshold (set by
+    session.tune) plans a sort and a limit. TakeOrderedAndProject would
+    hold 2·k slots per task, so top_k=10**9 above ran the heap out. The
+    explode hides the row count, so the optimizer keeps the limit."""
+    df = spark.range(20).select(F.explode(F.sequence(F.lit(0), F.col("id"))).alias("x"))
+
+    def plan(k):
+        return df.orderBy("x").limit(k)._jdf.queryExecution().executedPlan().toString()
+
+    assert "TakeOrderedAndProject" in plan(10)
+    assert "TakeOrderedAndProject" not in plan(10**9)
+    assert df.orderBy("x").limit(10**9).count() == 210
+
+
 # ---------------------------------------------------------------------------
 # VERDICT r6 #1: blocked_levenshtein_pairs automatic in-block salt cap
 # ---------------------------------------------------------------------------
