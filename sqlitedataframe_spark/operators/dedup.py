@@ -339,6 +339,22 @@ def minhash_lsh_pairs(
         banded = banded.join(
             df.select(F.col(id_col).alias("_id")), "_id", "left_semi"
         )
+        # Guard, as for ``sig=``: a table built with more bands would band
+        # wrong; a band outside [0, bands) raises instead of pairing.
+        banded = banded.withColumn(
+            "band",
+            F.when(
+                (F.col("band") >= 0) & (F.col("band") < bands), F.col("band")
+            ).otherwise(
+                F.raise_error(
+                    F.concat(
+                        F.lit("minhash_lsh_pairs: injected band "),
+                        F.col("band").cast("string"),
+                        F.lit(f" not in [0, bands={bands})"),
+                    )
+                )
+            ),
+        )
         banded = _suppress_hot_buckets(banded, ["band", "bucket"], max_bucket)
         if max_bucket is not None:
             # the window count must see this call's population; persist so

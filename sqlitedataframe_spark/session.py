@@ -38,14 +38,6 @@ def get_spark(app_name: str = "sqlitedataframe-spark", cpus: int | None = None) 
         .master(f"local[{n}]")
         # One shuffle partition per core locally; AQE coalesces small ones.
         .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", BROADCAST_THRESHOLD)
-        # Python DataSource filter pushdown (the SQLite bridge implements
-        # pushFilters; reads FAIL if the reader defines it while this is off)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.driver.memory",
@@ -54,7 +46,8 @@ def get_spark(app_name: str = "sqlitedataframe-spark", cpus: int | None = None) 
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    # tune adds the knobs the builder leaves out (the top-k sort fallback)
+    # tune sets the runtime knobs: time zone, AQE, broadcast threshold,
+    # Python data-source filter pushdown and the top-k sort fallback
     return tune(spark)
 
 
@@ -100,7 +93,8 @@ def tune(spark: SparkSession) -> SparkSession:
     except Exception:
         pass
     try:
-        # required for the SQLite bridge reader (it defines pushFilters)
+        # required for the SQLite bridge reader: reads FAIL if the reader
+        # defines pushFilters while this is off
         conf.set("spark.sql.python.filterPushdown.enabled", "true")
     except Exception:
         pass

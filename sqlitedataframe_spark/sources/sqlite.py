@@ -39,14 +39,15 @@ import datetime as dt
 import json
 import re
 import sqlite3
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
 from itertools import islice
+from operator import itemgetter
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType, TimestampType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType, TimestampType
 
 from sqlitedataframe_spark.errors import (
     SQLiteOperationalError,
@@ -58,8 +59,8 @@ from sqlitedataframe_spark.sqlite_types import (
     SQLiteType,
     affinity,
     ddl_decl,
-    decode_cell,
     encode_cell,
+    resolve_type,
     spark_schema,
 )
 
@@ -82,36 +83,30 @@ def _connect(path: str) -> sqlite3.Connection:
 # Cell decode into Arrow (shared by the table reader and statement reads)
 # ===========================================================================
 def _decode_batch(
-    rows: list[tuple],
-    cols: Sequence[tuple[int, SQLiteType]],
-    any_mode: str,
-    arrow_schema: pa.Schema,
+    rows: list[tuple], cols: Sequence[tuple[int, Callable]], arrow_schema: pa.Schema
 ) -> pa.RecordBatch:
-    """Decode ``rows`` column by column: result position ``i`` decoded as
-    type ``t`` for each ``(i, t)`` of ``cols``. Naive datetimes go into the
-    UTC timestamp type as UTC wall clock, so instants never depend on the
-    process time zone."""
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array([decode_cell(r[i], t, any_mode) for r in rows], type=field.type)
-            for (i, t), field in zip(cols, arrow_schema)
-        ],
-        schema=arrow_schema,
-    )
+    """Decode ``rows`` column by column: result position ``i`` through
+    ``decoder`` for each ``(i, decoder)`` of ``cols``, one call per non-NULL
+    cell. Naive datetimes go into the UTC timestamp type as UTC wall clock,
+    so instants never depend on the process time zone."""
+    arrays = [
+        pa.array([None if v is None else dec(v) for v in map(itemgetter(i), rows)], type=t)
+        for (i, dec), t in zip(cols, arrow_schema.types)
+    ]
+    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
 def _fetch_batches(
     cur: sqlite3.Cursor,
     head: list[tuple],
-    cols: Sequence[tuple[int, SQLiteType]],
-    any_mode: str,
+    cols: Sequence[tuple[int, Callable]],
     arrow_schema: pa.Schema,
 ) -> Iterator[pa.RecordBatch]:
     """``head`` (rows already fetched) and the rest of ``cur``, decoded in
     batches of ``_MIN_ROWS_PER_PARTITION`` rows."""
     rows = head + cur.fetchmany(_MIN_ROWS_PER_PARTITION - len(head))
     while rows:
-        yield _decode_batch(rows, cols, any_mode, arrow_schema)
+        yield _decode_batch(rows, cols, arrow_schema)
         rows = cur.fetchmany(_MIN_ROWS_PER_PARTITION)
 
 
@@ -126,15 +121,20 @@ class SQLiteRangePartition(InputPartition):
 
 class SQLiteReader(DataSourceReader):
     def __init__(self, options: dict, schema: StructType):
+        self.schema = schema
         self.path = options["path"]
         self.table = options["table"]
         self.rowid_alias = options.get("rowid_alias")
         self.columns = json.loads(options["columns"])
         self.types = {k: SQLiteType(v) for k, v in json.loads(options["types"]).items()}
+        any_mode = options.get("any_mode") or "string"
+        self.cols = [
+            (i, resolve_type(self.types.get(c, SQLiteType.ANY), any_mode)[1])
+            for i, c in enumerate(self.columns)
+        ]
         self.num_partitions = options.get("num_partitions")
         self.rowid_min = options.get("rowid_min")
         self.rowid_max = options.get("rowid_max")
-        self.any_mode = options.get("any_mode") or "string"
 
     # -- filter pushdown ---------------------------------------------------
     # Spark 4.1 Python DataSource pushdown. Design: SQLite evaluates a
@@ -260,12 +260,11 @@ class SQLiteReader(DataSourceReader):
         # The query selects self.columns in order, so cells are decoded by
         # position: SQLite names a selected rowid after its INTEGER PRIMARY
         # KEY alias, if the table has one.
-        cols = [(i, self.types.get(c, SQLiteType.ANY)) for i, c in enumerate(self.columns)]
-        arrow_schema = to_arrow_schema(spark_schema(self.columns, self.types, self.any_mode))
         conn = _connect(self.path)
         try:
             q, params = self._query(partition)
-            yield from _fetch_batches(conn.execute(q, params), [], cols, self.any_mode, arrow_schema)
+            cur = conn.execute(q, params)
+            yield from _fetch_batches(cur, [], self.cols, to_arrow_schema(self.schema))
         finally:
             conn.close()
 
@@ -490,13 +489,13 @@ def _read_statement(
         }
         schema = spark_schema([n for _, n in picked], col_types, any_mode)
         arrow_schema = to_arrow_schema(schema)
-        cols = [(i, col_types[n]) for i, n in picked]
-        batches = list(_fetch_batches(cur, head, cols, any_mode, arrow_schema))
+        cols = [(i, resolve_type(col_types[n], any_mode)[1]) for i, n in picked]
+        batches = list(_fetch_batches(cur, head, cols, arrow_schema))
     finally:
         conn.close()
     if not batches:
         # createDataFrame needs one chunk per column, even an empty one
-        batches = [_decode_batch([], cols, any_mode, arrow_schema)]
+        batches = [_decode_batch([], cols, arrow_schema)]
     df = spark.createDataFrame(pa.Table.from_batches(batches), schema=schema)
     # an in-memory relation is split across every core; a result that
     # fits one fetch batch stays one partition, like a small table read
@@ -529,10 +528,38 @@ def _bind_param_count(statement: str) -> int:
     return _NON_BINDING_SQL.sub("", statement).count("?")
 
 
-def _utc_cell(value):
-    """A ``TimestampType`` cell arrives as the worker's local wall clock;
-    store the instant's UTC wall clock, as reads take stored text as UTC."""
-    return None if value is None else encode_cell(value.astimezone(dt.timezone.utc))
+def _opt(f: Callable | None, value):
+    return value if f is None or value is None else f(value)
+
+
+def _to_utc(data_type: DataType) -> Callable | None:
+    """Map a non-NULL cell of ``data_type`` to the same value with every
+    ``TimestampType`` value in it, at any depth, turned from the worker's
+    local wall clock into the instant's naive UTC wall clock, as reads take
+    stored text as UTC. None when ``data_type`` holds no timestamp."""
+    if isinstance(data_type, TimestampType):
+        # fromtimestamp sets fold, so the repeated DST hour converts exactly
+        return lambda v: v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+    if isinstance(data_type, ArrayType):
+        el = _to_utc(data_type.elementType)
+        if el:
+            return lambda v: [_opt(el, x) for x in v]
+    elif isinstance(data_type, MapType):
+        k, x = _to_utc(data_type.keyType), _to_utc(data_type.valueType)
+        if k or x:
+            return lambda v: {_opt(k, a): _opt(x, b) for a, b in v.items()}
+    elif isinstance(data_type, StructType):
+        fields = [_to_utc(f.dataType) for f in data_type.fields]
+        if any(fields):
+            row = Row(*data_type.names)
+            return lambda v: row(*map(_opt, fields, v))
+    return None
+
+
+def _encoder(data_type: DataType) -> Callable:
+    """The bind encoder of a column, chosen once from its Spark type."""
+    to_utc = _to_utc(data_type)
+    return encode_cell if to_utc is None else lambda v: encode_cell(_opt(to_utc, v))
 
 
 def _run_sink(df: DataFrame, db_path: str, statement: str) -> None:
@@ -546,10 +573,7 @@ def _run_sink(df: DataFrame, db_path: str, statement: str) -> None:
     that returns rows (``SELECT``) is refused by ``executemany`` and raises.
     """
     n_params = _bind_param_count(statement)
-    encoders = [
-        _utc_cell if isinstance(f.dataType, TimestampType) else encode_cell
-        for f in df.schema.fields
-    ][:n_params]
+    encoders = [_encoder(f.dataType) for f in df.schema.fields][:n_params]
     pad = [None] * (n_params - len(encoders))
 
     def write_partition(rows: Iterator) -> None:
@@ -591,7 +615,8 @@ def write_sql(
 
     Both forms commit every ``_WRITE_BATCH`` rows of a partition, so a failed
     job leaves the batches committed before the failure. ``TimestampType``
-    cells are stored as UTC wall clock, whatever the process time zone.
+    values, also inside arrays, maps and structs, are stored as UTC wall
+    clock, whatever the process time zone.
     """
     if (table is None) == (statement is None):
         raise ValueError("exactly one of table= or statement= is required")

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import datetime as dt
 import re
+from collections.abc import Callable
 from decimal import Decimal
 from enum import Enum
 
@@ -84,9 +85,7 @@ ANY_STRUCT_TYPE = ST.StructType(
 
 
 def any_struct_cell(value):
-    """Runtime SQLite value -> tagged-union tuple for ANY_STRUCT_TYPE."""
-    if value is None:
-        return None
+    """Non-NULL runtime SQLite value -> tagged-union tuple for ANY_STRUCT_TYPE."""
     if isinstance(value, bool):
         return ("int", int(value), None, None, None)
     if isinstance(value, int):
@@ -99,20 +98,6 @@ def any_struct_cell(value):
         return ("blob", None, None, None, bytes(value))
     return ("text", None, None, str(value), None)
 
-
-#: SQLiteType -> Spark type (SURVEY §1.4). All nullable: the reference keeps
-#: every frame column nullable even for NOT NULL SQL columns (README.md:60).
-SPARK_TYPE: dict[SQLiteType, ST.DataType] = {
-    SQLiteType.INT: ST.LongType(),
-    SQLiteType.FLOAT: ST.DoubleType(),
-    SQLiteType.TEXT: ST.StringType(),
-    SQLiteType.BLOB: ST.BinaryType(),
-    SQLiteType.BOOL: ST.BooleanType(),
-    SQLiteType.DATE: ST.TimestampType(),
-    # No true dynamic column in Spark: ANY materializes as string, the
-    # lossless common representation (SURVEY §1.4 `.any` row).
-    SQLiteType.ANY: ST.StringType(),
-}
 
 #: Spark type -> SQL decl for generated DDL (reference :741-768). Unknown
 #: types produce a bare column (no decl) — legal in SQLite, affinity "none".
@@ -134,14 +119,10 @@ DDL_TYPE: dict[type, str] = {
 def spark_schema(
     names: list[str], types: dict[str, SQLiteType], any_mode: str = "string"
 ) -> ST.StructType:
-    def spark_type(t: SQLiteType) -> ST.DataType:
-        if t is SQLiteType.ANY and any_mode == "struct":
-            return ANY_STRUCT_TYPE
-        return SPARK_TYPE[t]
-
-    return ST.StructType(
-        [ST.StructField(n, spark_type(types.get(n, SQLiteType.ANY)), True) for n in names]
-    )
+    # All nullable: the reference keeps every frame column nullable even for
+    # NOT NULL SQL columns (README.md:60).
+    fields = [(n, resolve_type(types.get(n, SQLiteType.ANY), any_mode)[0]) for n in names]
+    return ST.StructType([ST.StructField(n, t, True) for n, t in fields])
 
 
 def ddl_decl(field: ST.StructField) -> str:
@@ -156,48 +137,45 @@ def ddl_decl(field: ST.StructField) -> str:
 # Mirrors the reference's typed decode switch (SQLiteDataFrame.swift:454-527)
 # including the 3-format date rule (:491-511) and bool != 0 (:455-456).
 # --------------------------------------------------------------------------
-def decode_cell(value, t: SQLiteType, any_mode: str = "string"):
-    if value is None:
+def _decode_int(value) -> int | None:
+    if isinstance(value, (int, float)):
+        v = int(value)
+    else:
+        # SQLite dynamic typing: TEXT can live in an INT-affinity column.
+        # sqlite3_column_int64 coerces (atoi semantics: longest numeric
+        # prefix, else 0) — one bad cell must not kill the read task.
+        v = _coerce_int(str(value))
+    # beyond-int64 values round-trip via text in the reference; surface
+    # them as string is lossy for LongType, so clamp-free passthrough and
+    # let callers use a Decimal override for UInt64 semantics.
+    return v if -(1 << 63) <= v <= INT64_MAX else None
+
+
+def _decode_float(value) -> float | None:
+    if isinstance(value, (bytes, bytearray)):
         return None
-    if t is SQLiteType.ANY and any_mode == "struct":
-        return any_struct_cell(value)
-    if t is SQLiteType.INT:
-        if isinstance(value, (int, float)):
-            v = int(value)
-        else:
-            # SQLite dynamic typing: TEXT can live in an INT-affinity column.
-            # sqlite3_column_int64 coerces (atoi semantics: longest numeric
-            # prefix, else 0) — one bad cell must not kill the read task.
-            v = _coerce_int(str(value))
-        # beyond-int64 values round-trip via text in the reference; surface
-        # them as string is lossy for LongType, so clamp-free passthrough and
-        # let callers use a Decimal override for UInt64 semantics.
-        return v if -(1 << 63) <= v <= INT64_MAX else None
-    if t is SQLiteType.FLOAT:
-        if isinstance(value, (bytes, bytearray)):
-            return None
-        if isinstance(value, (int, float)):
-            return float(value)
-        # sqlite3_column_double coercion for TEXT (prefix parse, else 0.0).
-        return _coerce_float(str(value))
-    if t is SQLiteType.TEXT:
-        if isinstance(value, (bytes, bytearray)):
-            return bytes(value).decode("utf-8", "replace")
-        return str(value)
-    if t is SQLiteType.BLOB:
-        if isinstance(value, (bytes, bytearray)):
-            return bytes(value)
-        return str(value).encode("utf-8")
-    if t is SQLiteType.BOOL:
-        if isinstance(value, (int, float)):
-            return value != 0
-        return None
-    if t is SQLiteType.DATE:
-        return decode_date(value)
-    # ANY: lossless string form of whatever arrived (SURVEY §1.4).
+    if isinstance(value, (int, float)):
+        return float(value)
+    # sqlite3_column_double coercion for TEXT (prefix parse, else 0.0).
+    return _coerce_float(str(value))
+
+
+def _decode_text(value) -> str:
     if isinstance(value, (bytes, bytearray)):
         return bytes(value).decode("utf-8", "replace")
     return str(value)
+
+
+def _decode_blob(value) -> bytes:
+    if isinstance(value, (bytes, bytearray)):
+        return bytes(value)
+    return str(value).encode("utf-8")
+
+
+def _decode_bool(value) -> bool | None:
+    if isinstance(value, (int, float)):
+        return value != 0
+    return None
 
 
 _INT_PREFIX = re.compile(r"^\s*[+-]?\d+")
@@ -234,8 +212,6 @@ def _coerce_float(text: str) -> float:
 def decode_date(value) -> dt.datetime | None:
     """3-format date decode: TEXT 'yyyy-MM-dd HH:mm:ss' (or ISO), INTEGER
     unix seconds, REAL Julian day (SQLiteDataFrame.swift:491-511)."""
-    if value is None:
-        return None
     if isinstance(value, int):
         return dt.datetime.fromtimestamp(value, dt.timezone.utc).replace(tzinfo=None)
     if isinstance(value, float):
@@ -250,6 +226,33 @@ def decode_date(value) -> dt.datetime | None:
             except ValueError:
                 continue
     return None
+
+
+#: SQLiteType -> (Spark type, decoder of a non-NULL cell) (SURVEY §1.4).
+#: There is no true dynamic column in Spark: ANY materializes as string, the
+#: lossless common representation (SURVEY §1.4 `.any` row), decoded as TEXT.
+_COLUMN_TYPES: dict[SQLiteType, tuple[ST.DataType, Callable]] = {
+    SQLiteType.INT: (ST.LongType(), _decode_int),
+    SQLiteType.FLOAT: (ST.DoubleType(), _decode_float),
+    SQLiteType.TEXT: (ST.StringType(), _decode_text),
+    SQLiteType.BLOB: (ST.BinaryType(), _decode_blob),
+    SQLiteType.BOOL: (ST.BooleanType(), _decode_bool),
+    SQLiteType.DATE: (ST.TimestampType(), decode_date),
+    SQLiteType.ANY: (ST.StringType(), _decode_text),
+}
+
+
+def resolve_type(t: SQLiteType, any_mode: str = "string") -> tuple[ST.DataType, Callable]:
+    """A column's Spark type and the decoder of its non-NULL cells, resolved
+    once per column; ``any_mode='struct'`` turns .any into ANY_STRUCT_TYPE."""
+    if t is SQLiteType.ANY and any_mode == "struct":
+        return ANY_STRUCT_TYPE, any_struct_cell
+    return _COLUMN_TYPES[t]
+
+
+def decode_cell(value, t: SQLiteType, any_mode: str = "string"):
+    """One SQLite runtime value -> Python value of column type ``t``."""
+    return None if value is None else resolve_type(t, any_mode)[1](value)
 
 
 # --------------------------------------------------------------------------

@@ -656,8 +656,8 @@ def test_workers_import_the_package_from_any_cwd(tmp_path):
     """A driver started outside the repository, with no PYTHONPATH: table
     reads, table writes and the DML sink run in Python workers, which must
     still import this package. The process time zone is not UTC: both write
-    forms store a timestamp as the instant's UTC wall clock, and a read
-    gives the same instant back."""
+    forms store a timestamp as the instant's UTC wall clock, also one inside
+    an array or a struct, and a read gives the same instant back."""
     import os
     import subprocess
     import sys
@@ -675,13 +675,15 @@ from sqlitedataframe_spark.sources.sqlite import exec_sql, read_sql, write_sql
 spark = (SparkSession.builder.master("local[1]")
          .config("spark.ui.enabled", "false")
          .config("spark.driver.memory", "1g").getOrCreate())
-exec_sql("w.db", "CREATE TABLE kv (k INTEGER PRIMARY KEY, v TEXT, ts DATE)")
-df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string").withColumn(
-    "ts", F.timestamp_seconds(F.lit(1704067200) + F.col("k")))
+exec_sql("w.db", "CREATE TABLE kv (k INTEGER PRIMARY KEY, v TEXT, ts DATE, a, s)")
+ts = F.timestamp_seconds(F.lit(1704067200) + F.col("k"))
+df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string").select(
+    "k", "v", ts.alias("ts"), F.array(ts).alias("a"), F.struct(ts.alias("t")).alias("s"))
 write_sql(df, "w.db", table="t")
-write_sql(df, "w.db", statement="INSERT INTO kv VALUES (?, ?, ?)")
+write_sql(df, "w.db", statement="INSERT INTO kv VALUES (?, ?, ?, ?, ?)")
 conn = sqlite3.connect("w.db")
-print("STORED", [conn.execute(f"SELECT ts FROM {{t}} ORDER BY k").fetchall() for t in ("t", "kv")])
+print("STORED", [conn.execute(f"SELECT ts, a, s FROM {{t}} ORDER BY k").fetchall()
+                 for t in ("t", "kv")])
 got = [
     sorted(map(tuple, read_sql(spark, "w.db", table=t)
                       .select("k", "v", F.unix_seconds("ts")).collect()))
@@ -697,7 +699,14 @@ spark.stop()
         [sys.executable, str(script)], cwd=tmp_path, env=env,
         capture_output=True, text=True, timeout=600,
     )
-    stored = [("2024-01-01 00:00:01",), ("2024-01-01 00:00:02",)]
+    stored = [
+        (
+            f"2024-01-01 00:00:0{k}",
+            f"[datetime.datetime(2024, 1, 1, 0, 0, {k})]",
+            f"Row(t=datetime.datetime(2024, 1, 1, 0, 0, {k}))",
+        )
+        for k in (1, 2)
+    ]
     assert f"STORED {[stored, stored]}" in out.stdout, out.stderr[-3000:]
     rows = [(1, "a", 1704067201), (2, "b", 1704067202)]
     assert f"RESULT {[rows, rows]}" in out.stdout, out.stderr[-3000:]

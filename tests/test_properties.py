@@ -1,6 +1,7 @@
 """Property-based tests (hypothesis) for the value model: encode → SQLite
-storage → decode round-trips across the type lattice, plus affinity rules.
-No Spark — pure Python, so hundreds of cases run in milliseconds.
+storage → decode round-trips across the type lattice, affinity rules, and
+the column pass against the per-cell decoder. No Spark session — pure
+Python, so hundreds of cases run in milliseconds.
 """
 
 from __future__ import annotations
@@ -11,12 +12,18 @@ import sqlite3
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from sqlitedataframe_spark.sources.sqlite import _decode_batch
 from sqlitedataframe_spark.sqlite_types import (
     INT64_MAX,
     SQLiteType,
     affinity,
     decode_cell,
     encode_cell,
+    resolve_type,
+    spark_schema,
 )
 
 I64 = st.integers(min_value=-(1 << 63), max_value=INT64_MAX)
@@ -89,6 +96,59 @@ def test_through_real_sqlite(i, s, f):
     assert decode_cell(row[1], SQLiteType.TEXT) == s
     assert decode_cell(row[2], SQLiteType.FLOAT) == f
     conn.close()
+
+
+#: One stored cell as sqlite3 returns it, from any storage class, with the
+#: corners the decoders coerce: TEXT in INT, REAL beyond int64, BLOB in
+#: FLOAT, invalid UTF-8, REAL booleans, the three date formats and junk.
+_DATES = st.datetimes(min_value=dt.datetime(1900, 1, 1), max_value=dt.datetime(2200, 1, 1))
+STORED_CELL = st.one_of(
+    st.none(),
+    I64,
+    st.floats(allow_nan=False, allow_infinity=False),
+    st.sampled_from([0.0, -0.0, 1.0, 0.5, -2.0, 9.3e18, -9.3e18, 1e19, 1.8e19]),
+    st.text(max_size=12),
+    st.sampled_from(["12abc", " -7", "3.5e2x", "+.5", "abc", "", "99999999999999999999"]),
+    st.binary(max_size=12),
+    st.sampled_from([b"\xff\xfe", b"\xc3\x28", b"42", b"2021-01-01"]),
+    _DATES.map(lambda d: d.strftime("%Y-%m-%d %H:%M:%S")),
+    _DATES.map(lambda d: d.strftime("%Y-%m-%dT%H:%M:%S")),
+    _DATES.map(lambda d: d.strftime("%Y-%m-%d %H:%M:%S.%f")),
+    _DATES.map(lambda d: d.strftime("%Y-%m-%d")),
+    st.integers(min_value=-(2**31), max_value=2**33),
+    st.floats(min_value=2_300_000.0, max_value=2_600_000.0),
+    st.sampled_from(["2021-13-45", "2021-01-01 25:00:00", "not a date", "01/02/2021"]),
+)
+
+
+def _outcome(decode):
+    """The decoded value, or the type of the exception decoding raised."""
+    try:
+        return decode()
+    except Exception as e:  # noqa: BLE001 (the two paths must fail alike)
+        return type(e)
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(STORED_CELL, max_size=30))
+def test_column_pass_matches_decode_cell(cells):
+    """``_decode_batch`` (one decoder per column, resolved once) decodes a
+    mixed-storage column exactly as ``decode_cell`` does cell by cell, for
+    every SQLiteType in both any_modes."""
+    rows = [(v,) for v in cells]
+    for t in SQLiteType:
+        for mode in ("string", "struct"):
+            schema = to_arrow_schema(spark_schema(["c"], {"c": t}, mode))
+            got = _outcome(
+                lambda: _decode_batch(rows, [(0, resolve_type(t, mode)[1])], schema).column(0)
+            )
+            want = _outcome(
+                lambda: pa.array([decode_cell(v, t, mode) for v in cells], type=schema[0].type)
+            )
+            if isinstance(want, pa.Array):
+                assert isinstance(got, pa.Array) and got.equals(want), (t, mode, cells)
+            else:
+                assert got is want, (t, mode, cells)
 
 
 # ---------------------------------------------------------------------------

@@ -94,7 +94,30 @@ def test_top_k_above_threshold_plans_sort_and_limit(spark):
     """A limit above spark.sql.execution.topKSortFallbackThreshold (set by
     session.tune) plans a sort and a limit. TakeOrderedAndProject would
     hold 2·k slots per task, so top_k=10**9 above ran the heap out. The
-    explode hides the row count, so the optimizer keeps the limit."""
+    explode hides the row count, so the optimizer keeps the limit.
+
+    get_spark leaves every runtime knob to tune; the session still has
+    tune's values of the confs the builder no longer sets."""
+    from sqlitedataframe_spark.session import BROADCAST_THRESHOLD
+
+    assert {
+        k: spark.conf.get(k)
+        for k in (
+            "spark.sql.session.timeZone",
+            "spark.sql.adaptive.enabled",
+            "spark.sql.adaptive.coalescePartitions.enabled",
+            "spark.sql.adaptive.skewJoin.enabled",
+            "spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.python.filterPushdown.enabled",
+        )
+    } == {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": BROADCAST_THRESHOLD,
+        "spark.sql.python.filterPushdown.enabled": "true",
+    }
     df = spark.range(20).select(F.explode(F.sequence(F.lit(0), F.col("id"))).alias("x"))
 
     def plan(k):
@@ -231,6 +254,29 @@ def test_minhash_injected_sig_length_guard(spark, sf_dir):
     # match the message, not the exception class.
     bad = minhash_lsh_pairs(docs, n_hashes=64, bands=16, sig=sig32)
     with pytest.raises(Exception, match="n_hashes"):
+        bad.collect()
+
+
+def test_minhash_injected_band_table_guard(spark, sf_dir):
+    """An injected band table built with more bands than the call's fails
+    loudly, as a mismatched ``sig=`` does, instead of pairing wrong."""
+    from sqlitedataframe_spark.io import load_table
+    from sqlitedataframe_spark.operators.dedup import (
+        minhash_band_table,
+        minhash_lsh_pairs,
+        minhash_signature_table,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").limit(40)
+    sig32 = minhash_signature_table(docs, n_hashes=32)
+    ok = minhash_lsh_pairs(
+        docs, n_hashes=32, bands=8, sig=sig32, banded=minhash_band_table(sig32, 32, 8)
+    )
+    ok.collect()
+    bad = minhash_lsh_pairs(
+        docs, n_hashes=32, bands=8, sig=sig32, banded=minhash_band_table(sig32, 32, 16)
+    )
+    with pytest.raises(Exception, match="injected band"):
         bad.collect()
 
 
