@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from sqlitedataframe_spark.functions.dialect import JULIAN_UNIX_EPOCH_DAYS
+from sqlitedataframe_spark.sqlite_types import JULIAN_UNIX_EPOCH_DAYS
 
 SQLITE_DATE_FORMAT = "yyyy-MM-dd HH:mm:ss"
 

@@ -15,10 +15,7 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: Days from the Julian-day epoch (4714-11-24 BC) to the Unix epoch.
-#: Inverse of the reference's decode ``(jd - 2440587.5) * 86400``
-#: (SQLiteDataFrame.swift:504-508).
-JULIAN_UNIX_EPOCH_DAYS = 2440587.5
+from sqlitedataframe_spark.sqlite_types import JULIAN_UNIX_EPOCH_DAYS
 
 
 def glob_to_rlike(pattern: str) -> str:
@@ -93,11 +90,9 @@ _STRFTIME_MAP = {
 }
 
 
-def strftime(fmt: str, ts: Column | str) -> Column:
-    """SQLite ``strftime(fmt, ts)`` for the common directives."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    if fmt == "%s":
-        return F.unix_timestamp(c)
+def strftime_to_date_format(fmt: str) -> str:
+    """A SQLite strftime format as a ``date_format`` pattern: directives are
+    translated, literal letters quoted and a literal ``'`` doubled."""
     out = []
     i = 0
     while i < len(fmt):
@@ -108,11 +103,23 @@ def strftime(fmt: str, ts: Column | str) -> Column:
             out.append(_STRFTIME_MAP[d])
             i += 2
         else:
-            # quote literal chars for date_format (Java SimpleDateFormat-ish)
             ch = fmt[i]
-            out.append(ch if not ch.isalpha() else f"'{ch}'")
+            if ch == "'":
+                out.append("''")  # Java pattern: literal quote is ''
+            elif ch.isalpha():
+                out.append(f"'{ch}'")  # Java pattern: quote literal letters
+            else:
+                out.append(ch)
             i += 1
-    return F.date_format(c, "".join(out))
+    return "".join(out)
+
+
+def strftime(fmt: str, ts: Column | str) -> Column:
+    """SQLite ``strftime(fmt, ts)`` for the common directives."""
+    c = F.col(ts) if isinstance(ts, str) else ts
+    if fmt == "%s":
+        return F.unix_timestamp(c)
+    return F.date_format(c, strftime_to_date_format(fmt))
 
 
 def unixepoch(ts: Column | str) -> Column:

@@ -31,6 +31,12 @@ Rewrites (conservative — only unambiguous patterns are touched):
                                seconds)
 - ``ifnull/instr/hex/abs/…`` need no rewrite (same-named in Spark).
 
+Rewrites follow SQLite's lexical rules (``NON_CODE_SQL``): string literals,
+quoted, backquoted and ``[…]`` identifiers, and ``--``/``/* */`` comments
+are not code, so nothing inside them is rewritten — a call inside ``[…]``
+included — and an apostrophe in a comment or identifier does not hide the
+code after it. A call whose ``(`` is not closed in code is left unchanged.
+
 Anything else passes through untouched and gets Spark SQL's (richer)
 semantics; true incompatibilities (e.g. SQLite's dynamic typing) surface as
 normal analysis errors.
@@ -42,53 +48,58 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sqlitedataframe_spark.functions.dialect import _STRFTIME_MAP, glob_to_rlike
+from sqlitedataframe_spark.functions.dialect import glob_to_rlike, strftime_to_date_format
+from sqlitedataframe_spark.sqlite_types import JULIAN_UNIX_EPOCH_DAYS
 
-#: literal single-quoted SQL string (with '' escapes)
-_STR = r"'(?:[^']|'')*'"
+#: SQL text that is not code, as SQLite's tokenizer reads it: string
+#: literals ('' escape), quoted, backquoted and bracketed identifiers, -- and
+#: /* */ comments. An unterminated literal or comment runs to the end.
+NON_CODE_SQL = re.compile(
+    r"'[^']*(?:''[^']*)*'"
+    r'|"[^"]*(?:""[^"]*)*"'
+    r"|`[^`]*(?:``[^`]*)*`"
+    r"|\[[^\]]*\]"
+    r"|--[^\n]*"
+    r"|/\*.*?\*/"
+    r"|['\"`\[].*|/\*.*",
+    re.S,
+)
 
 
-def _split_args(arglist: str) -> list[str]:
-    """Split a function-call argument list on top-level commas (respects
-    nested parens and string literals)."""
-    out, depth, cur, i = [], 0, [], 0
-    while i < len(arglist):
-        ch = arglist[i]
-        if ch == "'":
-            m = re.match(_STR, arglist[i:])
-            cur.append(m.group(0))
-            i += m.end()
+def _scan(sql: str) -> tuple[bytearray, dict[int, int]]:
+    """SQLite's lexical view of ``sql``: ``code[i]`` is 1 where ``sql[i]`` is
+    code, 0 inside a literal, quoted identifier or comment; ``close`` maps
+    each ``(`` in code to its matching ``)``. An unclosed ``(`` has none."""
+    code = bytearray(b"\1") * len(sql)
+    for m in NON_CODE_SQL.finditer(sql):
+        code[m.start() : m.end()] = bytes(m.end() - m.start())
+    close, opens = {}, []
+    for m in re.finditer(r"[()]", sql):
+        i = m.start()
+        if not code[i]:
             continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-            i += 1
+        if sql[i] == "(":
+            opens.append(i)
+        elif opens:
+            close[opens.pop()] = i
+    return code, close
+
+
+def _split_args(sql: str, code: bytearray, close: dict[int, int], i: int) -> list[str]:
+    """The arguments of the call whose ``(`` is at ``i``: its text split on
+    the commas in code outside nested parens."""
+    out, start, end = [], i + 1, close[i]
+    while (i := i + 1) < end:
+        if not code[i]:
             continue
-        cur.append(ch)
-        i += 1
-    if cur:
-        out.append("".join(cur).strip())
+        if sql[i] == "(":
+            i = close[i]
+        elif sql[i] == ",":
+            out.append(sql[start:i].strip())
+            start = i + 1
+    if start < end:
+        out.append(sql[start:end].strip())
     return out
-
-
-def _in_string_literal(sql: str, pos: int) -> bool:
-    """True when ``pos`` falls inside a single-quoted SQL string literal."""
-    i = 0
-    while i < pos:
-        if sql[i] == "'":
-            m = re.match(_STR, sql[i:])
-            if m is None:  # unterminated literal: everything after is inside
-                return True
-            if i + m.end() > pos:
-                return True
-            i += m.end()
-        else:
-            i += 1
-    return False
 
 
 #: type-name context: ``CAST(x AS CHAR(10))`` etc. must not be rewritten
@@ -96,50 +107,34 @@ _TYPE_CONTEXT = re.compile(r"(?i)\bas\s*$")
 
 
 def _rewrite_call(sql: str, fname: str, render) -> str:
-    """Replace every ``fname(args)`` call with ``render(args_list)``,
-    scanning balanced parens so nested calls survive. A render may return
-    ``None`` to leave that call unchanged (e.g. aggregate ``min(x)`` vs
-    scalar ``min(x, y)``); the search resumes after it either way.
-    Matches inside string literals and in type-name position (directly
-    after ``AS``, i.e. ``CAST(x AS CHAR(10))``) are never rewritten."""
+    """Replace every ``fname(args)`` call with ``render(args_list)``.
+    A render may return ``None`` to leave that call unchanged (e.g.
+    aggregate ``min(x)`` vs scalar ``min(x, y)``). Calls that are not code,
+    not closed in code, or in type-name position (directly after ``AS``,
+    i.e. ``CAST(x AS CHAR(10))``) are never rewritten."""
     pat = re.compile(rf"\b{fname}\s*\(", re.IGNORECASE)
-    pos = 0
-    while True:
-        m = pat.search(sql, pos)
-        if not m:
-            return sql
-        if _in_string_literal(sql, m.start()) or _TYPE_CONTEXT.search(
-            sql, 0, m.start()
-        ):
+    pos, scan = 0, None
+    while m := pat.search(sql, pos):
+        code, close = scan = scan or _scan(sql)
+        i = m.end() - 1
+        if i not in close or _TYPE_CONTEXT.search(sql, 0, m.start()):
             pos = m.end()
             continue
-        start, i, depth = m.start(), m.end(), 1
-        while i < len(sql) and depth:
-            ch = sql[i]
-            if ch == "'":
-                sm = re.match(_STR, sql[i:])
-                i += sm.end()
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        inner = sql[m.end() : i - 1]
-        repl = render(_split_args(inner))
+        repl = render(_split_args(sql, code, close, i))
         if repl is None:
-            pos = i
+            pos = close[i] + 1
             continue
         # resume at the replacement start: same-name calls nested inside the
         # argument text (now part of repl) still get rewritten — safe because
         # no render emits its own function name
-        sql = sql[:start] + repl + sql[i:]
-        pos = start
+        sql = sql[: m.start()] + repl + sql[close[i] + 1 :]
+        pos, scan = m.start(), None
+    return sql
 
 
 def _render_julianday(args: list[str]) -> str:
     (x,) = args
-    return f"(unix_micros(cast({x} as timestamp)) / 86400000000.0 + 2440587.5)"
+    return f"(unix_micros(cast({x} as timestamp)) / 86400000000.0 + {JULIAN_UNIX_EPOCH_DAYS})"
 
 
 def _render_unixepoch(args: list[str]) -> str:
@@ -154,26 +149,9 @@ def _render_strftime(args: list[str]) -> str:
     body = fmt[1:-1].replace("''", "'")  # un-escape the SQL literal
     if body == "%s":
         return f"unix_timestamp({x})"
-    out, i = [], 0
-    while i < len(body):
-        if body[i] == "%" and i + 1 < len(body):
-            d = body[i : i + 2]
-            if d not in _STRFTIME_MAP:
-                raise ValueError(f"unsupported strftime directive {d!r}")
-            out.append(_STRFTIME_MAP[d])
-            i += 2
-        else:
-            ch = body[i]
-            if ch == "'":
-                out.append("''")  # Java pattern: literal quote is ''
-            elif ch.isalpha():
-                out.append(f"'{ch}'")  # Java pattern: quote literal letters
-            else:
-                out.append(ch)
-            i += 1
-    # Re-escape for splicing into a single-quoted SQL literal: a pattern
-    # like yyyy'T'HH must read date_format(x, 'yyyy''T''HH').
-    pattern_sql = "".join(out).replace("'", "''")
+    # re-escape for splicing into a single-quoted SQL literal: a pattern
+    # like yyyy'T'HH must read date_format(x, 'yyyy''T''HH')
+    pattern_sql = strftime_to_date_format(body).replace("'", "''")
     return f"date_format({x}, '{pattern_sql}')"
 
 
@@ -307,18 +285,20 @@ _render_time = _render_date_fn("HH:mm:ss")
 def _rewrite_glob(sql: str) -> str:
     # <operand> GLOB '<pattern>' — operand is an identifier/qualified name
     # or a parenthesized expression immediately before GLOB.
-    pat = re.compile(
-        rf"(?P<lhs>[A-Za-z_][\w.]*|\))\s+GLOB\s+(?P<pat>{_STR})", re.IGNORECASE
-    )
-
-    def sub(m: re.Match) -> str:
-        if _in_string_literal(sql, m.start()):
-            return m.group(0)
-        glob = m.group("pat")[1:-1].replace("''", "'")
+    pat = re.compile(r"(?P<lhs>[A-Za-z_][\w.]*|\))\s+GLOB\s+(?=')", re.IGNORECASE)
+    if not pat.search(sql):
+        return sql
+    code, _ = _scan(sql)
+    out, pos = [], 0
+    for m in pat.finditer(sql):
+        lit = NON_CODE_SQL.match(sql, m.end()).group()
+        if not code[m.start()] or len(lit) < 2 or not lit.endswith("'"):
+            continue  # not code, or an unterminated pattern
+        glob = lit[1:-1].replace("''", "'")
         regex = glob_to_rlike(glob).replace("\\", "\\\\").replace("'", "''")
-        return f"{m.group('lhs')} RLIKE '{regex}'"
-
-    return pat.sub(sub, sql)
+        out += [sql[pos : m.start()], f"{m['lhs']} RLIKE '{regex}'"]
+        pos = m.end() + len(lit)
+    return "".join(out) + sql[pos:]
 
 
 #: SQLite storage-class names Spark's type parser rejects or narrows →
@@ -338,65 +318,20 @@ _CAST_TYPE_MAP = {
 }
 
 
-def _cast_close_parens(sql: str) -> set[int]:
-    """Positions of ``)`` characters that close a ``CAST(...)`` call.
-
-    One linear scan with a paren stack, skipping string literals and
-    quoted identifiers: a close paren qualifies iff its matching opener
-    is immediately preceded (whitespace allowed) by the bare word CAST.
-    This is what lets ``_rewrite_cast_types`` rewrite ``AS TEXT)`` only
-    inside a CAST — an alias named ``text`` at the end of a
-    parenthesized subquery (``(SELECT 1 AS text)``) closes a paren whose
-    opener is NOT a CAST call, so it survives (ADVICE r6)."""
-    stack: list[int] = []
-    out: set[int] = set()
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            i += 1
-            while i < n:
-                if sql[i] == "'":
-                    if i + 1 < n and sql[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif ch == '"':
-            i += 1
-            while i < n and sql[i] != '"':
-                i += 1
-        elif ch == "(":
-            stack.append(i)
-        elif ch == ")":
-            if stack:
-                o = stack.pop()
-                j = o - 1
-                while j >= 0 and sql[j].isspace():
-                    j -= 1
-                if (
-                    j >= 3
-                    and sql[j - 3 : j + 1].upper() == "CAST"
-                    and (j < 4 or not (sql[j - 4].isalnum() or sql[j - 4] == "_"))
-                ):
-                    out.add(i)
-        i += 1
-    return out
-
-
 def _rewrite_cast_types(sql: str) -> str:
-    # only the `AS <type> )` tail whose `)` closes a CAST( at matching
-    # paren depth — aliases named e.g. `text`, including at the end of a
-    # parenthesized subquery, survive (ADVICE r6).
+    # only the `AS <type> )` tail whose `)` closes a CAST( — an alias named
+    # e.g. `text` at the end of a parenthesized subquery (`(SELECT 1 AS
+    # text)`) closes a paren whose opener is not a CAST call, so it survives
     pat = re.compile(
         r"\bAS\s+(" + "|".join(_CAST_TYPE_MAP) + r")\s*\)", re.IGNORECASE
     )
-    cast_closes = _cast_close_parens(sql)
+    if not pat.search(sql):
+        return sql
+    code, close = _scan(sql)
+    cast_closes = {close.get(m.end() - 1) for m in re.finditer(r"(?i)\bCAST\s*\(", sql)}
 
     def sub(m: re.Match) -> str:
-        if _in_string_literal(sql, m.start()):
-            return m.group(0)
-        if m.end() - 1 not in cast_closes:
+        if not code[m.start()] or m.end() - 1 not in cast_closes:
             return m.group(0)
         return f"AS {_CAST_TYPE_MAP[m.group(1).upper()]})"
 

@@ -54,6 +54,7 @@ from sqlitedataframe_spark.errors import (
     TableExistsError,
     UnknownColumnError,
 )
+from sqlitedataframe_spark.functions.sql_rewrite import NON_CODE_SQL
 from sqlitedataframe_spark.session import ensure_worker_imports, tune
 from sqlitedataframe_spark.sqlite_types import (
     SQLiteType,
@@ -504,28 +505,19 @@ def _read_statement(
 
 _IF_EXISTS = ("fail", "ignore", "replace", "append")
 
-#: SQL text that can never contain a bind marker: string literals ('' escape),
-#: quoted/bracketed/backquoted identifiers, -- and /* */ comments.
-_NON_BINDING_SQL = re.compile(
-    r"'(?:[^']|'')*'"
-    r'|"(?:[^"]|"")*"'
-    r"|`(?:[^`]|``)*`"
-    r"|\[[^\]]*\]"
-    r"|--[^\n]*"
-    r"|/\*.*?\*/",
-    re.S,
-)
-
-
 def _bind_param_count(statement: str) -> int:
-    """Number of positional ``?`` bind parameters in ``statement``.
+    """Number of bind parameters of ``statement``, as SQLite numbers them.
 
     The reference asks the prepared statement (sqlite3_bind_parameter_count,
     SQLiteDataFrame.swift:572-591); the Python driver doesn't expose that, so
-    strip every quoted literal / identifier / comment first — a ``?`` inside
-    ``'text?'`` is data, not a parameter — then count what remains.
+    blank every literal, quoted identifier and comment first — a ``?`` inside
+    ``'text?'`` is data, not a parameter — then number what remains: ``?NNN``
+    takes index NNN, a bare ``?`` the largest index so far plus 1.
     """
-    return _NON_BINDING_SQL.sub("", statement).count("?")
+    n = 0
+    for m in re.finditer(r"\?(\d*)", NON_CODE_SQL.sub(" ", statement)):
+        n = max(n, int(m[1])) if m[1] else n + 1
+    return n
 
 
 def _opt(f: Callable | None, value):

@@ -9,6 +9,7 @@ affinity rules (:171-194), DDL type map (:741-768).
 from __future__ import annotations
 
 import datetime as dt
+import math
 import re
 from collections.abc import Callable
 from decimal import Decimal
@@ -138,6 +139,8 @@ def ddl_decl(field: ST.StructField) -> str:
 # including the 3-format date rule (:491-511) and bool != 0 (:455-456).
 # --------------------------------------------------------------------------
 def _decode_int(value) -> int | None:
+    if isinstance(value, float) and not math.isfinite(value):
+        return None  # SQLite stores 1e999 as REAL inf: beyond int64
     if isinstance(value, (int, float)):
         v = int(value)
     else:
@@ -211,12 +214,14 @@ def _coerce_float(text: str) -> float:
 
 def decode_date(value) -> dt.datetime | None:
     """3-format date decode: TEXT 'yyyy-MM-dd HH:mm:ss' (or ISO), INTEGER
-    unix seconds, REAL Julian day (SQLiteDataFrame.swift:491-511)."""
-    if isinstance(value, int):
-        return dt.datetime.fromtimestamp(value, dt.timezone.utc).replace(tzinfo=None)
-    if isinstance(value, float):
-        secs = (value - JULIAN_UNIX_EPOCH_DAYS) * 86400.0
-        return dt.datetime.fromtimestamp(secs, dt.timezone.utc).replace(tzinfo=None)
+    unix seconds, REAL Julian day (SQLiteDataFrame.swift:491-511). A number
+    outside the datetime range is undecodable: None."""
+    if isinstance(value, (int, float)):
+        secs = value if isinstance(value, int) else (value - JULIAN_UNIX_EPOCH_DAYS) * 86400.0
+        try:
+            return dt.datetime.fromtimestamp(secs, dt.timezone.utc).replace(tzinfo=None)
+        except (OverflowError, ValueError, OSError):
+            return None
     if isinstance(value, (bytes, bytearray)):
         value = bytes(value).decode("utf-8", "replace")
     if isinstance(value, str):

@@ -45,6 +45,29 @@ def test_read_table(spark, tasks_db):
     assert df.columns == ["description", "done", "date"]
 
 
+def test_read_decodes_out_of_range_cells_to_null(spark, tmp_path):
+    """One storable but undecodable cell reads as NULL in both read forms,
+    not a failed task: REAL inf (SQLite's 1e999) in an INT column, and a
+    REAL Julian day or unix seconds beyond year 9999 in a DATE column."""
+    db = str(tmp_path / "edge.db")
+    exec_sql(
+        db,
+        "CREATE TABLE edge (k INT, i INT, d DATE);"
+        "INSERT INTO edge VALUES (1, 1e999, 1e19), (2, -1e999, 253402300800),"
+        " (3, 7, 0);",
+    )
+    want = [
+        (1, None, None),
+        (2, None, None),
+        (3, 7, dt.datetime(1970, 1, 1)),
+    ]
+    for df in (
+        read_sql(spark, db, table="edge"),
+        read_sql(spark, db, statement="SELECT k, i, d FROM edge"),
+    ):
+        assert sorted((r.k, r.i, r.d) for r in df.collect()) == want
+
+
 def test_read_statement_with_params(spark, tasks_db):
     # prepared-statement entry point with caller binds (reference A3 :346-397)
     df = read_sql(
@@ -266,6 +289,24 @@ def test_bind_param_count_ignores_literals():
     assert _bind_param_count('SELECT "odd?col" FROM t WHERE x = ?') == 1
     assert _bind_param_count("SELECT 1 -- really?\n WHERE x = ?") == 1
     assert _bind_param_count("SELECT /* eh? */ ? || 'it''s?'") == 1
+    # SQLite's numbering: ?NNN takes index NNN, a bare ? the largest so far + 1
+    assert _bind_param_count("INSERT INTO t VALUES (?1, ?1)") == 1
+    assert _bind_param_count("SELECT ?2, ?") == 3
+    assert _bind_param_count("SELECT ?3, ?1") == 3
+    assert _bind_param_count("SELECT ?, ?1, ?") == 2
+    assert _bind_param_count("SELECT '?9' AS \"?8\", ?2 -- ?7") == 2
+
+
+def test_write_statement_numbered_params(spark, tmp_path):
+    """``?1`` used twice is one bind parameter: one column fills both."""
+    db = str(tmp_path / "n.db")
+    exec_sql(db, "CREATE TABLE pairs (a TEXT, b TEXT)")
+    df = spark.createDataFrame([("x",), ("y",)], ["v"])
+    write_sql(df, db, statement="INSERT INTO pairs VALUES (?1, ?1)")
+    conn = sqlite3.connect(db)
+    rows = sorted(conn.execute("SELECT a, b FROM pairs").fetchall())
+    conn.close()
+    assert rows == [("x", "x"), ("y", "y")]
 
 
 def test_write_statement_with_question_in_literal(spark, tmp_path):

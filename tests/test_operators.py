@@ -126,6 +126,8 @@ def test_strftime(spark):
         strftime("%Y-%m-%d %H:%M:%S", F.to_timestamp("s")).alias("f")
     ).collect()[0].f
     assert got == "2021-06-01 12:34:56"
+    quoted = df.select(strftime("%Y'%m", F.to_timestamp("s")).alias("f")).first().f
+    assert quoted == "2021'06"
 
 
 def test_group_concat(spark):

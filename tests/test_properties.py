@@ -7,6 +7,8 @@ Python, so hundreds of cases run in milliseconds.
 from __future__ import annotations
 
 import datetime as dt
+import math
+import re
 import sqlite3
 
 from hypothesis import given, settings
@@ -15,7 +17,7 @@ from hypothesis import strategies as st
 import pyarrow as pa
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from sqlitedataframe_spark.sources.sqlite import _decode_batch
+from sqlitedataframe_spark.sources.sqlite import _bind_param_count, _decode_batch
 from sqlitedataframe_spark.sqlite_types import (
     INT64_MAX,
     SQLiteType,
@@ -118,6 +120,8 @@ STORED_CELL = st.one_of(
     st.integers(min_value=-(2**31), max_value=2**33),
     st.floats(min_value=2_300_000.0, max_value=2_600_000.0),
     st.sampled_from(["2021-13-45", "2021-01-01 25:00:00", "not a date", "01/02/2021"]),
+    # out of range: REAL inf (SQLite's 1e999), dates past year 9999 or before 1
+    st.sampled_from([math.inf, -math.inf, 1e19, 253402300800, -62135596801]),
 )
 
 
@@ -149,6 +153,37 @@ def test_column_pass_matches_decode_cell(cells):
                 assert isinstance(got, pa.Array) and got.equals(want), (t, mode, cells)
             else:
                 assert got is want, (t, mode, cells)
+
+
+#: One select-list item, the text after it and the gap before the next: bind
+#: markers (bare and numbered), literals and "…" aliases holding ``?`` and
+#: ``''``, and ``--``/``/* */`` comments holding ``?`` and apostrophes.
+_BIND_ITEM = st.tuples(
+    st.one_of(
+        st.just("?"),
+        st.integers(1, 12).map(lambda n: f"?{n}"),
+        st.sampled_from(["'?'", "'it''s?'", "''", "'?1'", "1"]),
+    ),
+    st.sampled_from(["", ' AS "a?"', ' AS "o\'k"']),
+    st.sampled_from([" ", " -- ?, it's ?2\n", " /* ?1 '? */ ", "\n"]),
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(_BIND_ITEM, min_size=1, max_size=8))
+def test_bind_param_count_matches_sqlite(items):
+    """``_bind_param_count`` agrees with SQLite's own count, which its
+    "The current statement uses N" error reports."""
+    stmt = "SELECT " + ",".join(f"{e}{alias}{gap}" for e, alias, gap in items)
+    conn = sqlite3.connect(":memory:")
+    try:
+        conn.execute(stmt, [])
+        uses = 0
+    except sqlite3.ProgrammingError as e:
+        uses = int(re.search(r"uses (\d+)", str(e))[1])
+    finally:
+        conn.close()
+    assert _bind_param_count(stmt) == uses, stmt
 
 
 # ---------------------------------------------------------------------------

@@ -197,3 +197,25 @@ def test_glob_inside_string_literal_untouched():
     out = translate_sqlite_sql(sql)
     assert "'a GLOB ''*x*'' pattern'" in out  # literal intact
     assert "RLIKE" in out  # real GLOB still rewritten
+
+
+def test_rewriter_reads_comments_and_quoted_identifiers_as_sqlite_does():
+    """An apostrophe in a comment or a quoted identifier is not a literal's
+    start, so the calls after it are still rewritten."""
+    out = translate_sqlite_sql("SELECT x -- don't\n, julianday(d) FROM t")
+    assert "julianday" not in out and "2440587.5" in out
+    out = translate_sqlite_sql("SELECT \"o'neil\", iif(a,1,2) FROM t")
+    assert out == "SELECT \"o'neil\", if(a, 1, 2) FROM t"
+    out = translate_sqlite_sql("SELECT a /* it's */, min(a, b) FROM t")
+    assert "least(a, b)" in out and "min(" not in out
+
+
+def test_rewriter_leaves_calls_in_non_code_alone():
+    sql = "SELECT [min(a, b)], \"iif(a, 1, 2)\" FROM t /* julianday(d) */ -- min(a, b)"
+    assert translate_sqlite_sql(sql) == sql
+
+
+def test_unterminated_literal_or_call_passes_through():
+    # left for Spark's parser to report, never a translation-time crash
+    for sql in ("SELECT iif(a, 'x, b)", "SELECT iif(a, 1, 2", "SELECT x GLOB 'a*"):
+        assert translate_sqlite_sql(sql) == sql

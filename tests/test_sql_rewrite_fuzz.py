@@ -157,7 +157,8 @@ def test_differential_scalar_exprs(engines, exprs):
     # suite's #1 offender (126 s) in the driver-timeout budget.
     spark, con = engines
     cols = ", ".join(f"{e} AS v{i}" for i, e in enumerate(exprs))
-    stmt = f"SELECT {cols} FROM t ORDER BY i"
+    # the apostrophe in the comment must not hide the calls after it
+    stmt = f"SELECT /* it's */ {cols} FROM t ORDER BY i"
     sqlite_rows = con.execute(stmt).fetchall()
     spark_rows = sqlite_sql(spark, stmt).collect()
     for i, e in enumerate(exprs):
