@@ -95,6 +95,20 @@ def minhash_params(n_hashes: int = 64, seed: int = 7) -> tuple[list[int], list[i
     return a, b
 
 
+def minhash_base_hash(s: Column) -> Column:
+    """The family's base hash of a string: its 32-bit md5 prefix, reduced
+    mod P. Every engine has md5, so a SQL twin reproduces it exactly."""
+    return F.conv(F.substring(F.md5(s.cast("binary")), 1, 8), 16, 10).cast(
+        "bigint"
+    ) % F.lit(_MINHASH_P).cast("bigint")
+
+
+def minhash_remix(a: Column, b: Column, h: Column) -> Column:
+    """One member of the family applied to base hash ``h``:
+    ``(a * h + b) mod P``."""
+    return (a * h + b) % F.lit(_MINHASH_P).cast("bigint")
+
+
 def minhash_signatures(
     df: DataFrame, id_col: str, shingle_col: str, n_hashes: int = 64
 ) -> DataFrame:
@@ -116,12 +130,7 @@ def minhash_signatures(
     a_arr = F.array(*[F.lit(a).cast("bigint") for a in a_coef])
     b_arr = F.array(*[F.lit(b).cast("bigint") for b in b_coef])
     p = F.lit(_MINHASH_P).cast("bigint")
-    hashed = F.transform(
-        F.col(shingle_col),
-        lambda s: F.conv(
-            F.substring(F.md5(s.cast("binary")), 1, 8), 16, 10
-        ).cast("bigint"),
-    )
+    hashed = F.transform(F.col(shingle_col), minhash_base_hash)
     # Let-binding via a 1-element transform: the string-hash array is the
     # ARGUMENT of the outer transform, so it is evaluated exactly once per
     # row; the seed loop reads the bound lambda variable `hs`. Without this,
@@ -144,7 +153,7 @@ def minhash_signatures(
                         F.array(F.element_at(a_arr, i + 1)),
                         F.array(F.element_at(b_arr, i + 1)),
                         lambda ai, bi: F.aggregate(
-                            hs, p, lambda acc, h: F.least(acc, (ai * h + bi) % p)
+                            hs, p, lambda acc, h: F.least(acc, minhash_remix(ai, bi, h))
                         ),
                     ),
                     1,

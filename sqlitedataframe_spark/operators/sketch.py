@@ -348,18 +348,17 @@ def minhash_set_signatures(
     group (map-side combine makes the exchange |groups|-sized, not
     |members|-sized).
     """
-    from sqlitedataframe_spark.operators.dedup import _MINHASH_P, minhash_params
+    from sqlitedataframe_spark.operators.dedup import (
+        minhash_base_hash,
+        minhash_params,
+        minhash_remix,
+    )
 
     a_coef, b_coef = minhash_params(n_hashes)
-    h = F.conv(
-        F.substring(F.md5(F.col(member_col).cast("string").cast("binary")), 1, 8),
-        16,
-        10,
-    ).cast("bigint")
-    p = F.lit(_MINHASH_P).cast("bigint")
+    h = minhash_base_hash(F.col(member_col).cast("string"))
     mins = [
-        F.min((F.lit(a_coef[i]) * h + F.lit(b_coef[i])) % p).alias(f"mh{i}")
-        for i in range(n_hashes)
+        F.min(minhash_remix(F.lit(a), F.lit(b), h)).alias(f"mh{i}")
+        for i, (a, b) in enumerate(zip(a_coef, b_coef))
     ]
     return (
         df.select(F.col(group_col).alias("grp"), F.col(member_col))

@@ -162,42 +162,69 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (the count-min recipe), so the signatures, band buckets, candidate sets
 # and estimates are pure functions of the data and EXACTLY oracle-checked.
 # --------------------------------------------------------------------------
-_MH_A, _MH_B = D.minhash_params(64)
-_MH_SEEDS = ", ".join(
-    f"({i}, {a}, {b})" for i, (a, b) in enumerate(zip(_MH_A, _MH_B))
-)
-
-#: Shared MinHash-LSH oracle CTE chain (through the candidate estimates):
-#: reused by dedup_minhash_lsh and the threshold-curve diagnostic in
-#: pipeline11 so both DuckDB twins stay bit-identical with the Spark path.
-MH_EST_CTE = f"""
-    WITH t AS (
+#: Tokens of every document, t(doc_id, t) (operators.text.tokens).
+DOC_TOKENS = """t AS (
       SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-      FROM documents),
-    sh AS (
+      FROM documents)"""
+
+#: Distinct 3-token shingles sh(doc_id, sh) of t (dedup.shingles).
+DOC_SHINGLES = """sh AS (
       SELECT doc_id,
              list_distinct(list_transform(range(1, greatest(len(t) - 1, 2)),
                            i -> array_to_string(list_slice(t, i, i + 2), ' '))) AS sh
-      FROM t),
+      FROM t)"""
+
+
+def minhash_ctes(
+    source: str, key: str = "doc_id", member: str = "s", banded: bool = True
+) -> str:
+    """The DuckDB twin of the MinHash family in operators.dedup: the
+    ``hs``, ``seeds``, ``sig`` and (if ``banded``) ``banded`` CTEs for
+    the (``key``, ``member``) rows of the FROM clause ``source``. P and
+    the 64 (a, b) coefficients come from dedup, so the engines cannot
+    drift apart: h is the member's 32-bit md5 prefix mod P, slot i of
+    ``sig`` the min of (a_i * h + b_i) mod P, and each band's bucket the
+    60-bit md5 prefix of its 4 slots joined by ','."""
+    a, b = D.minhash_params(64)
+    seeds = ", ".join(f"({i}, {x}, {y})" for i, (x, y) in enumerate(zip(a, b)))
+    p = D._MINHASH_P
+    ctes = f"""
     hs AS (
-      SELECT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h
-      FROM sh, UNNEST(sh) AS u(s)
-      WHERE len(sh) > 0),
-    seeds(i, a, b) AS (VALUES {_MH_SEEDS}),
+      SELECT {key}, CAST('0x' || substr(md5({member}), 1, 8) AS BIGINT) % {p} AS h
+      FROM {source}),
+    seeds(i, a, b) AS (VALUES {seeds}),
     sig AS (
-      SELECT doc_id, i, MIN((a * h + b) % 2305843009213693951) AS mh
-      FROM hs CROSS JOIN seeds GROUP BY doc_id, i),
+      SELECT {key}, i, MIN((a * h + b) % {p}) AS mh
+      FROM hs CROSS JOIN seeds GROUP BY {key}, i)"""
+    if banded:
+        ctes += f""",
     banded AS (
-      SELECT doc_id, i // 4 AS band,
+      SELECT {key}, i // 4 AS band,
              CAST('0x' || substr(md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i)),
                                  1, 15) AS BIGINT) AS bucket
-      FROM sig GROUP BY doc_id, i // 4),
+      FROM sig GROUP BY {key}, i // 4)"""
+    return ctes
+
+
+def minhash_pair_ctes(
+    head: str = f"WITH {DOC_TOKENS},\n    {DOC_SHINGLES}", suppress: bool = True
+) -> str:
+    """The twin of ``dedup.minhash_lsh_pairs`` (64 hashes, 16 bands) up to
+    ``est(id_a, id_b, est_jaccard)``: ``head`` is a WITH clause that
+    defines ``sh(doc_id, sh)``; ``suppress`` drops buckets of more than
+    10,000 documents (``max_bucket``) before pairing."""
+    side = "banded"
+    ctes = head + "," + minhash_ctes("sh, UNNEST(sh) AS u(s) WHERE len(sh) > 0")
+    if suppress:
+        side = "live"
+        ctes += """,
     live AS (
       SELECT * FROM banded
-      QUALIFY COUNT(*) OVER (PARTITION BY band, bucket) <= 10000),
+      QUALIFY COUNT(*) OVER (PARTITION BY band, bucket) <= 10000)"""
+    return ctes + f""",
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM live a JOIN live b
+      FROM {side} a JOIN {side} b
         ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
     est AS (
       SELECT c.id_a, c.id_b,
@@ -210,14 +237,22 @@ MH_EST_CTE = f"""
 """
 
 
-@query(
-    "dedup_minhash_lsh",
-    oracle=MH_EST_CTE
-    + """
+#: Shared MinHash-LSH oracle CTE chain (through the candidate estimates)
+#: over the whole documents corpus, the twin of every minhash_lsh_pairs
+#: call on the shared signature table.
+MH_EST_CTE = minhash_pair_ctes()
+
+#: Oracle tail of dedup_minhash_lsh and its streaming twin.
+MH_PAIRS_03 = """
     SELECT id_a, id_b, est_jaccard FROM est
     WHERE est_jaccard >= 0.3
     ORDER BY id_a, id_b
-    """,
+    """
+
+
+@query(
+    "dedup_minhash_lsh",
+    oracle=MH_EST_CTE + MH_PAIRS_03,
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidate pairs (est. Jaccard >= 0.3).
@@ -710,46 +745,18 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pipeline_near_dedup_lsh",
-    oracle=f"""
-    WITH RECURSIVE d0 AS (
+    oracle=minhash_pair_ctes(
+        f"""
+    WITH RECURSIVE t AS (
       SELECT doc_id, lang, source,
              regexp_split_to_array(lower(trim(text)), '\\s+') AS t
       FROM documents
       WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '6666'),
-    dd AS (SELECT doc_id, lang, source, len(t) AS n_tokens FROM d0),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(t) - 1, 2)),
-                           i -> array_to_string(list_slice(t, i, i + 2), ' '))) AS sh
-      FROM d0),
-    hs AS (
-      SELECT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h
-      FROM sh, UNNEST(sh) AS u(s)
-      WHERE len(sh) > 0),
-    seeds(i, a, b) AS (VALUES {{seeds}}),
-    sig AS (
-      SELECT doc_id, i, MIN((a * h + b) % 2305843009213693951) AS mh
-      FROM hs CROSS JOIN seeds GROUP BY doc_id, i),
-    banded AS (
-      SELECT doc_id, i // 4 AS band,
-             CAST('0x' || substr(md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i)),
-                                 1, 15) AS BIGINT) AS bucket
-      FROM sig GROUP BY doc_id, i // 4),
-    live AS (
-      SELECT * FROM banded
-      QUALIFY COUNT(*) OVER (PARTITION BY band, bucket) <= 10000),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM live a JOIN live b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-    est AS (
-      SELECT c.id_a, c.id_b,
-             SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) / 64.0 AS ej
-      FROM cand c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b AND sb.i = sa.i
-      GROUP BY c.id_a, c.id_b),
-    edges AS (SELECT id_a AS src, id_b AS dst FROM est WHERE ej >= 0.8),
+    dd AS (SELECT doc_id, lang, source, len(t) AS n_tokens FROM t),
+    {DOC_SHINGLES}"""
+    )
+    + """,
+    edges AS (SELECT id_a AS src, id_b AS dst FROM est WHERE est_jaccard >= 0.8),
     sym AS (SELECT src, dst FROM edges
             UNION ALL SELECT dst AS src, src AS dst FROM edges),
     reach(a, b) AS (
@@ -768,7 +775,7 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM dd d JOIN comp c USING (doc_id)
     GROUP BY d.lang, d.source
     ORDER BY d.lang, d.source
-    """.replace("{seeds}", _MH_SEEDS),
+    """,
 )
 def pipeline_near_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end near-duplicate REMOVAL with the 100 TB edge generator:

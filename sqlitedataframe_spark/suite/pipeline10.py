@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from sqlitedataframe_spark.operators import evalmetrics as E
 from sqlitedataframe_spark.operators import text as X
 from sqlitedataframe_spark.suite import query
+from sqlitedataframe_spark.suite.pipeline import DOC_TOKENS, minhash_pair_ctes
 from sqlitedataframe_spark.suite.relational import T
 
 #: Shared oracle CTE: the text_quality SQL twin + the binary label.
@@ -1077,50 +1078,22 @@ def profile_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t_closeness_audit(j, ["nat", "yr"], "seg", t_threshold=0.2)
 
 
-def _lsh_recall_oracle() -> str:
-    from sqlitedataframe_spark.suite.pipeline import _MH_SEEDS
-
-    return f"""
-    WITH t AS (
-      SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-      FROM documents),
-    sh AS (SELECT doc_id, list_distinct(t) AS sh FROM t),
+@query(
+    "dedup_lsh_recall",
+    oracle=minhash_pair_ctes(
+        f"""
+    WITH {DOC_TOKENS},
+    sh AS (SELECT doc_id, list_distinct(t) AS sh FROM t)"""
+    )
+    + """,
     truth AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
       FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
       WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
             / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.5),
-    hs AS (
-      SELECT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h
-      FROM sh, UNNEST(sh) AS u(s)
-      WHERE len(sh) > 0),
-    seeds(i, a, b) AS (VALUES {_MH_SEEDS}),
-    sig AS (
-      SELECT doc_id, i, MIN((a * h + b) % 2305843009213693951) AS mh
-      FROM hs CROSS JOIN seeds GROUP BY doc_id, i),
-    banded AS (
-      SELECT doc_id, i // 4 AS band,
-             CAST('0x' || substr(md5(string_agg(CAST(mh AS VARCHAR), ','
-                                 ORDER BY i)), 1, 15) AS BIGINT) AS bucket
-      FROM sig GROUP BY doc_id, i // 4),
-    live AS (
-      SELECT * FROM banded
-      QUALIFY COUNT(*) OVER (PARTITION BY band, bucket) <= 10000),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM live a JOIN live b
-        ON a.band = b.band AND a.bucket = b.bucket
-       AND a.doc_id < b.doc_id),
-    est AS (
-      SELECT c.id_a, c.id_b,
-             SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) / 64.0 AS ej
-      FROM cand c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b AND sb.i = sa.i
-      GROUP BY c.id_a, c.id_b),
     found AS (
       SELECT id_a, id_b FROM est
-      WHERE ej >= 0.3 AND id_b = id_a + 1),
+      WHERE est_jaccard >= 0.3 AND id_b = id_a + 1),
     hit AS (
       SELECT truth.id_a FROM truth JOIN found USING (id_a, id_b))
     SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
@@ -1132,10 +1105,8 @@ def _lsh_recall_oracle() -> str:
            ROUND((SELECT COUNT(*) FROM hit) * 1.0
                  / NULLIF((SELECT COUNT(*) FROM found), 0) + 1e-9, 6)
              AS precision
-    """
-
-
-@query("dedup_lsh_recall", oracle=_lsh_recall_oracle())
+    """,
+)
 def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall / precision of token-level MinHash LSH (shingle_k=1 —
     the variant matched to this corpus's permutation-style duplicates)

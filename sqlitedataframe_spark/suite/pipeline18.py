@@ -31,6 +31,7 @@ from sqlitedataframe_spark.operators.text import (
 from sqlitedataframe_spark.suite import query
 from sqlitedataframe_spark.suite.pipeline import (
     MH_EST_CTE,
+    minhash_pair_ctes,
     shared_doc_banded,
     shared_doc_sigs,
 )
@@ -546,11 +547,6 @@ def eval_contamination_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Cross-snapshot incremental curation funnel.
 # ---------------------------------------------------------------------------
-_MH_A18, _MH_B18 = D.minhash_params(64)
-_MH_SEEDS18 = ", ".join(
-    f"({i}, {a}, {b})" for i, (a, b) in enumerate(zip(_MH_A18, _MH_B18))
-)
-
 #: The MH_EST_CTE pair chain WITHOUT hot-bucket suppression: the
 #: incremental union == one-shot equivalence is only UNCONDITIONAL with
 #: max_bucket=None on every side (the minhash_lsh_pairs ADVICE r4
@@ -558,41 +554,7 @@ _MH_SEEDS18 = ", ".join(
 #: bucket that crosses the threshold only once the full corpus arrives
 #: would break snapshot-merge equality). Both engines therefore pair
 #: unsuppressed here.
-_MH_EST_NOSUPP = f"""
-    WITH t AS (
-      SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(t) - 1, 2)),
-                           i -> array_to_string(list_slice(t, i, i + 2), ' '))) AS sh
-      FROM t),
-    hs AS (
-      SELECT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h
-      FROM sh, UNNEST(sh) AS u(s)
-      WHERE len(sh) > 0),
-    seeds(i, a, b) AS (VALUES {_MH_SEEDS18}),
-    sig AS (
-      SELECT doc_id, i, MIN((a * h + b) % 2305843009213693951) AS mh
-      FROM hs CROSS JOIN seeds GROUP BY doc_id, i),
-    banded AS (
-      SELECT doc_id, i // 4 AS band,
-             CAST('0x' || substr(md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i)),
-                                 1, 15) AS BIGINT) AS bucket
-      FROM sig GROUP BY doc_id, i // 4),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM banded a JOIN banded b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-    est AS (
-      SELECT c.id_a, c.id_b,
-             ROUND(SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) / 64.0, 6)
-               AS est_jaccard
-      FROM cand c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b AND sb.i = sa.i
-      GROUP BY c.id_a, c.id_b)
-"""
+_MH_EST_NOSUPP = minhash_pair_ctes(suppress=False)
 
 
 @query(

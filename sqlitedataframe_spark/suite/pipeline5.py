@@ -17,6 +17,11 @@ from sqlitedataframe_spark.operators import profiling as P
 from sqlitedataframe_spark.operators import relational as R
 from sqlitedataframe_spark.operators import text as X
 from sqlitedataframe_spark.suite import query
+from sqlitedataframe_spark.suite.pipeline import (
+    MH_EST_CTE,
+    shared_doc_banded,
+    shared_doc_sigs,
+)
 from sqlitedataframe_spark.suite.relational import T
 
 
@@ -887,57 +892,14 @@ def scd2_merge_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Incremental LSH dedup: new batch vs corpus, old-old pairs never generated.
 # ---------------------------------------------------------------------------
-def _mh_seeds() -> str:
-    from sqlitedataframe_spark.operators.dedup import minhash_params
-
-    a, b = minhash_params(64)
-    return ", ".join(f"({i}, {x}, {y})" for i, (x, y) in enumerate(zip(a, b)))
-
-
 @query(
     "dedup_incremental_lsh",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(t) - 1, 2)),
-                           i -> array_to_string(list_slice(t, i, i + 2), ' '))) AS sh
-      FROM t),
-    hs AS (
-      SELECT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h
-      FROM sh, UNNEST(sh) AS u(s)
-      WHERE len(sh) > 0),
-    seeds(i, a, b) AS (VALUES {seeds}),
-    sig AS (
-      SELECT doc_id, i, MIN((a * h + b) % 2305843009213693951) AS mh
-      FROM hs CROSS JOIN seeds GROUP BY doc_id, i),
-    banded AS (
-      SELECT doc_id, i // 4 AS band,
-             CAST('0x' || substr(md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i)),
-                                 1, 15) AS BIGINT) AS bucket
-      FROM sig GROUP BY doc_id, i // 4),
-    live AS (
-      SELECT * FROM banded
-      QUALIFY COUNT(*) OVER (PARTITION BY band, bucket) <= 10000),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM live a JOIN live b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-      WHERE a.doc_id % 5 = 0 OR b.doc_id % 5 = 0),
-    est AS (
-      SELECT c.id_a, c.id_b,
-             ROUND(SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) / 64.0, 6)
-               AS est_jaccard
-      FROM cand c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b AND sb.i = sa.i
-      GROUP BY c.id_a, c.id_b)
+    oracle=MH_EST_CTE
+    + """
     SELECT id_a, id_b, est_jaccard FROM est
-    WHERE est_jaccard >= 0.3
+    WHERE est_jaccard >= 0.3 AND (id_a % 5 = 0 OR id_b % 5 = 0)
     ORDER BY id_a, id_b
-    """.replace("{seeds}", _mh_seeds()),
+    """,
 )
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dedup — the continuous-ingestion shape: a new
@@ -951,11 +913,6 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-joins to the batch, so self-join cost scales with the batch, not
     the corpus.
     """
-    from sqlitedataframe_spark.suite.pipeline import (
-        shared_doc_banded,
-        shared_doc_sigs,
-    )
-
     d = T(spark, sf_dir, "documents")
     batch = d.filter(F.col("doc_id") % 5 == 0).select("doc_id")
     return D.minhash_lsh_pairs(

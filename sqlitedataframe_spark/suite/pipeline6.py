@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sqlitedataframe_spark.suite import query
+from sqlitedataframe_spark.suite.pipeline import minhash_ctes
 from sqlitedataframe_spark.suite.relational import T
 
 #: The fixed retrieval query for text_bm25_topk — terms present in the
@@ -396,25 +397,11 @@ def events_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _aud_mh_seeds() -> str:
-    from sqlitedataframe_spark.operators.dedup import minhash_params
-
-    a, b = minhash_params(64)
-    return ", ".join(f"({i}, {x}, {y})" for i, (x, y) in enumerate(zip(a, b)))
-
-
 @query(
     "events_minhash_audience",
-    oracle="""
-    WITH h AS (
-      SELECT event_type,
-             CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8)
-               AS BIGINT) AS h
-      FROM events),
-    seeds(i, a, b) AS (VALUES {seeds}),
-    sig AS (
-      SELECT event_type, i, MIN((a * h + b) % 2305843009213693951) AS mh
-      FROM h CROSS JOIN seeds GROUP BY event_type, i),
+    oracle="WITH"
+    + minhash_ctes("events", "event_type", "CAST(user_id AS VARCHAR)", banded=False)
+    + """,
     est AS (
       SELECT sa.event_type AS grp_a, sb.event_type AS grp_b,
              ROUND(SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) / 64.0, 6)
@@ -423,7 +410,7 @@ def _aud_mh_seeds() -> str:
       JOIN sig sb ON sb.i = sa.i AND sa.event_type < sb.event_type
       GROUP BY 1, 2)
     SELECT grp_a, grp_b, est_jaccard FROM est ORDER BY grp_a, grp_b
-    """.replace("{seeds}", _aud_mh_seeds()),
+    """,
 )
 def events_minhash_audience(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs audience overlap via per-segment MinHash SET signatures

@@ -21,6 +21,7 @@ from sqlitedataframe_spark.streaming import (
 )
 from sqlitedataframe_spark.streaming.core import stream_stream_attribution
 from sqlitedataframe_spark.suite import query
+from sqlitedataframe_spark.suite.pipeline import MH_EST_CTE, MH_PAIRS_03
 
 #: Shared session-boundary oracle CTE (30-min inactivity gap per user).
 _SESSION_CTE = """
@@ -361,56 +362,9 @@ def stream_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(agg, output_mode="complete").orderBy("event_type")
 
 
-def _inc_mh_seeds() -> str:
-    from sqlitedataframe_spark.operators.dedup import minhash_params
-
-    a, b = minhash_params(64)
-    return ", ".join(f"({i}, {x}, {y})" for i, (x, y) in enumerate(zip(a, b)))
-
-
 @query(
     "stream_incremental_dedup",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(t) - 1, 2)),
-                           i -> array_to_string(list_slice(t, i, i + 2), ' '))) AS sh
-      FROM t),
-    hs AS (
-      SELECT doc_id, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h
-      FROM sh, UNNEST(sh) AS u(s)
-      WHERE len(sh) > 0),
-    seeds(i, a, b) AS (VALUES {seeds}),
-    sig AS (
-      SELECT doc_id, i, MIN((a * h + b) % 2305843009213693951) AS mh
-      FROM hs CROSS JOIN seeds GROUP BY doc_id, i),
-    banded AS (
-      SELECT doc_id, i // 4 AS band,
-             CAST('0x' || substr(md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i)),
-                                 1, 15) AS BIGINT) AS bucket
-      FROM sig GROUP BY doc_id, i // 4),
-    live AS (
-      SELECT * FROM banded
-      QUALIFY COUNT(*) OVER (PARTITION BY band, bucket) <= 10000),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM live a JOIN live b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-    est AS (
-      SELECT c.id_a, c.id_b,
-             ROUND(SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) / 64.0, 6)
-               AS est_jaccard
-      FROM cand c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b AND sb.i = sa.i
-      GROUP BY c.id_a, c.id_b)
-    SELECT id_a, id_b, est_jaccard FROM est
-    WHERE est_jaccard >= 0.3
-    ORDER BY id_a, id_b
-    """.replace("{seeds}", _inc_mh_seeds()),
+    oracle=MH_EST_CTE + MH_PAIRS_03,
 )
 def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming near-dedup ingest: each document micro-batch LSH-checks
