@@ -76,22 +76,29 @@ def shingles(text_col: Column | str, k: int = 3) -> Column:
     )
 
 
-#: Modulus of the portable affine MinHash family (Mersenne prime 2^61 - 1).
-_MINHASH_P = (1 << 61) - 1
+#: Modulus of the portable affine MinHash family (Mersenne prime 2^31 - 1).
+_MINHASH_P = (1 << 31) - 1
 
 
 def minhash_params(n_hashes: int = 64, seed: int = 7) -> tuple[list[int], list[int]]:
     """The (a_i, b_i) coefficients of the universal affine hash family
     ``g_i(h) = (a_i * h + b_i) mod P`` — fixed by ``seed`` so signatures
-    are a pure function of the data. a_i < 2^30 bounds ``a_i * h`` (h is a
-    32-bit md5 prefix) at 2^62: no bigint overflow under ANSI arithmetic
-    in ANY engine, which is what makes the family portable to SQL oracles.
+    are a pure function of the data.
+
+    h is reduced mod P and a_i, b_i are drawn from [1, P), so
+    ``a_i * h + b_i <= (P - 1)^2 + (P - 1) = P(P - 1) < 2^62``: no bigint
+    overflow under ANSI arithmetic in any engine, which is what makes the
+    family portable to SQL oracles. P must stay below the range of h for
+    the remix to wrap many times: with P = 2^61 - 1 and a 32-bit h,
+    ``a_i * h + b_i`` wrapped at most once, so every g_i ordered the
+    shingles almost as h does, all 64 slots picked the same minimum, and
+    the estimated Jaccard of a pair collapsed to about 0 or 1.
     """
     import random
 
     rng = random.Random(seed)
-    a = [rng.randrange(1, 1 << 30) for _ in range(n_hashes)]
-    b = [rng.randrange(0, 1 << 30) for _ in range(n_hashes)]
+    a = [rng.randrange(1, _MINHASH_P) for _ in range(n_hashes)]
+    b = [rng.randrange(1, _MINHASH_P) for _ in range(n_hashes)]
     return a, b
 
 
@@ -113,19 +120,20 @@ def minhash_signatures(
     df: DataFrame, id_col: str, shingle_col: str, n_hashes: int = 64
 ) -> DataFrame:
     """MinHash signatures computed entirely SCAN-SIDE, one nested
-    higher-order expression per row: hash each shingle once (32-bit md5
-    prefix), then for each of n seeds fold the running min of the affine
-    remixes ``(a_i * h + b_i) mod P`` — the classic one-base-hash MinHash
-    with a universal family. No explode, no groupBy, ZERO shuffle:
-    signatures fall out of the scan stage itself, and the nested
-    ``transform`` evaluates as an internal loop (tiny codegen — no
-    64-column aggregate to compile).
+    higher-order expression per row: hash each shingle once
+    (:func:`minhash_base_hash`), then for each of n seeds fold the running
+    min of the affine remixes ``(a_i * h + b_i) mod P`` — the classic
+    one-base-hash MinHash with a universal family. No explode, no
+    groupBy, ZERO shuffle: signatures fall out of the scan stage itself,
+    and the nested ``transform`` evaluates as an internal loop (tiny
+    codegen — no 64-column aggregate to compile).
 
     md5 (not xxhash64) is deliberate — the count-min recipe: every engine
     has md5, so the signature matrix, band buckets, and candidate pairs
     are EXACTLY reproducible in a SQL oracle (sketch.py proved the
-    pattern). The affine coefficients are sized so no remix overflows
-    (see :func:`minhash_params`)."""
+    pattern; suite.pipeline.minhash_ctes is the twin). The affine
+    coefficients are sized so no remix overflows (see
+    :func:`minhash_params`)."""
     a_coef, b_coef = minhash_params(n_hashes)
     a_arr = F.array(*[F.lit(a).cast("bigint") for a in a_coef])
     b_arr = F.array(*[F.lit(b).cast("bigint") for b in b_coef])

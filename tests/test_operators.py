@@ -72,6 +72,59 @@ def test_minhash_hot_bucket_suppression(spark):
     assert D.minhash_lsh_pairs(df, max_bucket=None).count() == 30 * 29 // 2
 
 
+def test_minhash_estimates_track_half_jaccard(spark):
+    # 20 token-set pairs with Jaccard exactly 40/80 = 0.5: each estimate
+    # from 64 slots has sd ~0.06, so [0.25, 0.75] is a 4-sd band. A family
+    # whose slots all pick the same minimum estimates ~0 or ~1 instead.
+    rows = []
+    for p in range(20):
+        shared = [f"p{p}s{k}" for k in range(40)]
+        rows.append((2 * p, shared + [f"p{p}a{k}" for k in range(20)]))
+        rows.append((2 * p + 1, shared + [f"p{p}b{k}" for k in range(20)]))
+    df = spark.createDataFrame(rows, "doc_id long, sh array<string>")
+    sigs = {r.doc_id: r._sig for r in D.minhash_signatures(df, "doc_id", "sh").collect()}
+    ests = [
+        sum(x == y for x, y in zip(sigs[2 * p], sigs[2 * p + 1])) / 64
+        for p in range(20)
+    ]
+    assert all(0.25 <= e <= 0.75 for e in ests), ests
+
+
+def test_spark_and_duckdb_share_one_minhash_family(spark):
+    # The suite's DuckDB oracles run suite.pipeline.minhash_ctes; it must
+    # give the Spark signatures and band buckets slot for slot.
+    import duckdb
+
+    from sqlitedataframe_spark.suite.pipeline import minhash_ctes
+
+    words = [f"w{i}" for i in range(30)]
+    docs = [
+        (d, [" ".join(words[(d * 7 + k) % 30 : (d * 7 + k) % 30 + 3]) for k in range(d + 3)])
+        for d in range(20)
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, sh array<string>")
+    sig = D.minhash_signatures(df, "doc_id", "sh").withColumnRenamed("doc_id", "_id")
+    spark_sig = {r._id: list(r._sig) for r in sig.collect()}
+    spark_band = {(r._id, r.band): r.bucket for r in D.minhash_band_table(sig).collect()}
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE src (doc_id BIGINT, s VARCHAR)")
+    con.executemany(
+        "INSERT INTO src VALUES (?, ?)", [(d, s) for d, sh in docs for s in set(sh)]
+    )
+    ctes = "WITH" + minhash_ctes("src")
+    duck_sig: dict[int, list[int]] = {}
+    for d, i, mh in con.sql(ctes + " SELECT doc_id, i, mh FROM sig ORDER BY doc_id, i").fetchall():
+        duck_sig.setdefault(d, []).append(mh)
+    duck_band = {
+        (d, band): bucket
+        for d, band, bucket in con.sql(ctes + " SELECT doc_id, band, bucket FROM banded").fetchall()
+    }
+    assert len(spark_sig) == 20 and all(len(v) == 64 for v in duck_sig.values())
+    assert duck_sig == spark_sig
+    assert duck_band == spark_band
+
+
 # -- simhash ----------------------------------------------------------------
 def test_simhash_identical_distance_zero(spark):
     t = "one two three four five six seven eight nine ten"
