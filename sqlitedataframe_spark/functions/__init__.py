@@ -13,13 +13,7 @@ from sqlitedataframe_spark.functions.dialect import (
     from_julianday,
     strftime,
     group_concat,
-    sqlite_instr,
-    sqlite_printf,
     unixepoch,
-)
-from sqlitedataframe_spark.functions.datetime import (
-    sqlite_decode_date,
-    sqlite_encode_date,
 )
 
 __all__ = [
@@ -29,9 +23,5 @@ __all__ = [
     "from_julianday",
     "strftime",
     "group_concat",
-    "sqlite_instr",
-    "sqlite_printf",
     "unixepoch",
-    "sqlite_decode_date",
-    "sqlite_encode_date",
 ]

@@ -143,14 +143,3 @@ def group_concat(col: Column | str, sep: str = ",", sort: bool = True) -> Column
         arr = F.array_sort(arr)
     return F.array_join(arr, sep)
 
-
-def sqlite_instr(haystack: Column | str, needle: str) -> Column:
-    """SQLite ``instr(x, y)`` -> 1-based index, 0 when absent (= Spark instr)."""
-    h = F.col(haystack) if isinstance(haystack, str) else haystack
-    return F.instr(h, needle)
-
-
-def sqlite_printf(fmt: str, *cols: Column | str) -> Column:
-    """SQLite ``printf``/``format`` -> format_string."""
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.format_string(fmt, *cs)

@@ -115,6 +115,8 @@ def _fetch_batches(
 # Python Data Source
 # ===========================================================================
 class SQLiteRangePartition(InputPartition):
+    """Rows with ``lo <= rowid <= hi``; a None bound is open."""
+
     def __init__(self, lo: int | None, hi: int | None):
         self.lo = lo
         self.hi = hi
@@ -226,7 +228,9 @@ class SQLiteReader(DataSourceReader):
 
     def partitions(self) -> Sequence[InputPartition]:
         # Split the rowid keyspace into disjoint ranges so each executor
-        # core reads its own slice.
+        # core reads its own slice. The range is the one read_sql() saw;
+        # the first slice is open below and the last open above, so rows
+        # added outside it since are still read.
         if self.rowid_min is not None and self.rowid_max is not None:
             lo, hi = int(self.rowid_min), int(self.rowid_max)
             span = hi - lo + 1
@@ -236,10 +240,11 @@ class SQLiteReader(DataSourceReader):
                 # default sizing: no slice narrower than _MIN_ROWS_PER_PARTITION
                 cap = min(_DEFAULT_READ_PARTITIONS, span // _MIN_ROWS_PER_PARTITION or 1)
             n = max(1, min(cap, span))
-            step = (hi - lo + 1 + n - 1) // n
+            step = (span + n - 1) // n
+            cuts = [lo + i * step for i in range(1, n)]
             return [
-                SQLiteRangePartition(lo + i * step, min(lo + (i + 1) * step - 1, hi))
-                for i in range(n)
+                SQLiteRangePartition(a, None if b is None else b - 1)
+                for a, b in zip([None, *cuts], [*cuts, None])
             ]
         return [SQLiteRangePartition(None, None)]
 
@@ -249,8 +254,11 @@ class SQLiteReader(DataSourceReader):
         where: list[str] = []
         params: list = []
         if partition.lo is not None:
-            where.append("rowid BETWEEN ? AND ?")
-            params.extend([partition.lo, partition.hi])
+            where.append("rowid >= ?")
+            params.append(partition.lo)
+        if partition.hi is not None:
+            where.append("rowid <= ?")
+            params.append(partition.hi)
         where.extend(getattr(self, "pushed_sql", []))
         params.extend(getattr(self, "pushed_params", []))
         if where:
@@ -505,19 +513,37 @@ def _read_statement(
 
 _IF_EXISTS = ("fail", "ignore", "replace", "append")
 
-def _bind_param_count(statement: str) -> int:
-    """Number of bind parameters of ``statement``, as SQLite numbers them.
+#: A bind parameter marker: ``?``, ``?NNN``, or a name ``:AAA``, ``@AAA``,
+#: ``$AAA`` (not the ``$`` inside an identifier such as ``a$b``).
+_BIND_MARKER = re.compile(r"\?(\d*)|(?<![\w$])[:@$][\w$]+")
+
+
+def _bind_params(statement: str) -> tuple[int, dict[str, int], bool]:
+    """The bind parameters of ``statement``, numbered as SQLite numbers
+    them: their count, the index of each name, and whether any is ``?``.
 
     The reference asks the prepared statement (sqlite3_bind_parameter_count,
     SQLiteDataFrame.swift:572-591); the Python driver doesn't expose that, so
     blank every literal, quoted identifier and comment first — a ``?`` inside
     ``'text?'`` is data, not a parameter — then number what remains: ``?NNN``
-    takes index NNN, a bare ``?`` the largest index so far plus 1.
+    takes index NNN, a bare ``?`` or a new name the largest index so far
+    plus 1, and a repeated name its first index.
     """
-    n = 0
-    for m in re.finditer(r"\?(\d*)", NON_CODE_SQL.sub(" ", statement)):
-        n = max(n, int(m[1])) if m[1] else n + 1
-    return n
+    n, names, positional = 0, {}, False
+    for m in _BIND_MARKER.finditer(NON_CODE_SQL.sub(" ", statement)):
+        if m[0][0] != "?":
+            if m[0] not in names:
+                n += 1
+                names[m[0]] = n
+        else:
+            positional = True
+            n = max(n, int(m[1])) if m[1] else n + 1
+    return n, names, positional
+
+
+def _bind_param_count(statement: str) -> int:
+    """Number of bind parameters of ``statement`` (see :func:`_bind_params`)."""
+    return _bind_params(statement)[0]
 
 
 def _opt(f: Callable | None, value):
@@ -563,8 +589,18 @@ def _run_sink(df: DataFrame, db_path: str, statement: str) -> None:
     lock, then commits them with one ``executemany`` transaction, so tasks
     encode in parallel and only the commits queue on the lock. A statement
     that returns rows (``SELECT``) is refused by ``executemany`` and raises.
+
+    Named parameters (``:a``, ``@a``, ``$a``) bind by their SQLite index
+    too; when every parameter is named, each row goes to the driver as a
+    mapping, as it expects for names.
     """
-    n_params = _bind_param_count(statement)
+    n_params, names, positional = _bind_params(statement)
+    if names and positional:
+        raise ValueError(f"statement mixes ? and named parameters: {statement!r}")
+    # the driver looks a name up without its prefix, so :a and @a would clash
+    keys = [name[1:] for name in names]
+    if len(set(keys)) < len(keys):
+        raise ValueError(f"statement binds two names as one: {statement!r}")
     encoders = [_encoder(f.dataType) for f in df.schema.fields][:n_params]
     pad = [None] * (n_params - len(encoders))
 
@@ -575,6 +611,8 @@ def _run_sink(df: DataFrame, db_path: str, statement: str) -> None:
                 [enc(v) for enc, v in zip(encoders, row)] + pad
                 for row in islice(rows, _WRITE_BATCH)
             ]:
+                if keys:
+                    batch = [dict(zip(keys, cells)) for cells in batch]
                 with conn:
                     conn.executemany(statement, batch)
         finally:
@@ -602,8 +640,11 @@ def write_sql(
 
     Statement form (reference A8, :572-591): execute an arbitrary
     parameterized DML once per row with positional binds; extra statement
-    params bind NULL, extra DataFrame columns are dropped. A statement that
-    returns rows, such as ``SELECT ?``, raises.
+    params bind NULL, extra DataFrame columns are dropped. Column i binds
+    parameter index i, also for ``:name``, ``@name`` and ``$name``, which
+    SQLite numbers in order of first use; a statement that mixes ``?`` and
+    names raises ``ValueError``. A statement that returns rows, such as
+    ``SELECT ?``, raises.
 
     Both forms commit every ``_WRITE_BATCH`` rows of a partition, so a failed
     job leaves the batches committed before the failure. ``TimestampType``

@@ -157,6 +157,25 @@ def test_rowid_partitioned_read(spark, tasks_db):
     assert sorted(r.rowid for r in df.collect()) == [1, 2, 3]
 
 
+def test_table_read_sees_rows_outside_the_first_rowid_range(spark, db_path):
+    """A table read is lazy: rows inserted above the largest or below the
+    smallest rowid after read_sql() are read by the next action."""
+    exec_sql(db_path, "CREATE TABLE t (v INTEGER)")
+    conn = sqlite3.connect(db_path)
+    with conn:
+        conn.executemany("INSERT INTO t (v) VALUES (?)", [(i,) for i in range(30)])
+    df = read_sql(spark, db_path, table="t", num_partitions=3)
+    assert df.count() == 30
+    with conn:
+        conn.executemany("INSERT INTO t (v) VALUES (?)", [(i,) for i in range(5)])
+        conn.execute("INSERT INTO t (rowid, v) VALUES (-7, 0)")
+        conn.execute("DELETE FROM t WHERE rowid <= 10 AND rowid > 0")
+    (n,) = conn.execute("SELECT COUNT(*) FROM t").fetchone()
+    conn.close()
+    assert n == 26 and df.count() == n
+    assert df.rdd.getNumPartitions() == 3
+
+
 # -- write paths (reference testWriteSQL :96-111, testWriteTable :113-127,
 #    exists-policies :129-172, round-trip :175-198) -------------------------
 def _frame(spark):
@@ -295,6 +314,11 @@ def test_bind_param_count_ignores_literals():
     assert _bind_param_count("SELECT ?3, ?1") == 3
     assert _bind_param_count("SELECT ?, ?1, ?") == 2
     assert _bind_param_count("SELECT '?9' AS \"?8\", ?2 -- ?7") == 2
+    # a new name takes the largest index so far + 1, a repeated one its own
+    assert _bind_param_count("SELECT :a, :b") == 2
+    assert _bind_param_count("SELECT :a, @a, $a, :a") == 3
+    assert _bind_param_count("SELECT ?5, :a") == 6
+    assert _bind_param_count("SELECT ':a', a$b, \"@c\" -- $d") == 0
 
 
 def test_write_statement_numbered_params(spark, tmp_path):
@@ -307,6 +331,21 @@ def test_write_statement_numbered_params(spark, tmp_path):
     rows = sorted(conn.execute("SELECT a, b FROM pairs").fetchall())
     conn.close()
     assert rows == [("x", "x"), ("y", "y")]
+
+
+def test_write_statement_named_params(spark, tmp_path):
+    """Named parameters bind by SQLite's index: a repeated name is one
+    parameter, and mixing names with ``?`` is refused."""
+    db = str(tmp_path / "named.db")
+    exec_sql(db, "CREATE TABLE t (a TEXT, b INTEGER, c TEXT)")
+    df = spark.createDataFrame([("x", 1), ("y", 2)], ["s", "n"])
+    write_sql(df, db, statement="INSERT INTO t VALUES (:s, @n, :s)")
+    conn = sqlite3.connect(db)
+    rows = sorted(conn.execute("SELECT a, b, c FROM t").fetchall())
+    conn.close()
+    assert rows == [("x", 1, "x"), ("y", 2, "y")]
+    with pytest.raises(ValueError, match="VALUES"):
+        write_sql(df, db, statement="INSERT INTO t VALUES (:s, ?, NULL)")
 
 
 def test_write_statement_with_question_in_literal(spark, tmp_path):
@@ -494,7 +533,7 @@ def test_pushdown_translation_units():
     from sqlitedataframe_spark.sources.sqlite import SQLiteRangePartition
 
     q, params = r._query(SQLiteRangePartition(0, 99))
-    assert "rowid BETWEEN ? AND ?" in q and "CAST(\"i\" AS INTEGER) > ?" in q
+    assert "rowid >= ? AND rowid <= ?" in q and "CAST(\"i\" AS INTEGER) > ?" in q
     assert params == [0, 99, 5]
 
 

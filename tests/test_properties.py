@@ -156,13 +156,14 @@ def test_column_pass_matches_decode_cell(cells):
 
 
 #: One select-list item, the text after it and the gap before the next: bind
-#: markers (bare and numbered), literals and "…" aliases holding ``?`` and
-#: ``''``, and ``--``/``/* */`` comments holding ``?`` and apostrophes.
+#: markers (bare, numbered and named), literals and "…" aliases holding ``?``
+#: and ``''``, and ``--``/``/* */`` comments holding ``?`` and apostrophes.
 _BIND_ITEM = st.tuples(
     st.one_of(
         st.just("?"),
         st.integers(1, 12).map(lambda n: f"?{n}"),
-        st.sampled_from(["'?'", "'it''s?'", "''", "'?1'", "1"]),
+        st.sampled_from([":a", ":b", "@a", "$a", ":a1", "$b$"]),
+        st.sampled_from(["'?'", "'it''s?'", "''", "'?1'", "1", "':a'"]),
     ),
     st.sampled_from(["", ' AS "a?"', ' AS "o\'k"']),
     st.sampled_from([" ", " -- ?, it's ?2\n", " /* ?1 '? */ ", "\n"]),
