@@ -260,9 +260,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactly oracle-checked: the md5+affine hash family (operators.dedup.
     minhash_params) makes the 64-wide signature matrix, the 16 band
     buckets, the hot-bucket guard, the candidate set and the agreement
-    estimate all pure functions of the data — the DuckDB twin rebuilds
-    the identical structure relationally (seeds inlined as a VALUES
-    table) and must produce the same pairs bit-for-bit."""
+    estimate all pure functions of the data — the DuckDB twin
+    (minhash_pair_ctes) rebuilds the identical structure relationally
+    and must produce the same pairs bit-for-bit."""
     d = T(spark, sf_dir, "documents")
     return D.minhash_lsh_pairs(
         d,
