@@ -346,6 +346,9 @@ def test_write_statement_named_params(spark, tmp_path):
     assert rows == [("x", 1, "x"), ("y", 2, "y")]
     with pytest.raises(ValueError, match="VALUES"):
         write_sql(df, db, statement="INSERT INTO t VALUES (:s, ?, NULL)")
+    # the driver would look :s and @s up under one key, s
+    with pytest.raises(ValueError, match="VALUES"):
+        write_sql(df, db, statement="INSERT INTO t VALUES (:s, @s, NULL)")
 
 
 def test_write_statement_with_question_in_literal(spark, tmp_path):
