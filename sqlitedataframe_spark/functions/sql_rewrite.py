@@ -103,7 +103,15 @@ def _split_args(sql: str, code: bytearray, close: dict[int, int], i: int) -> lis
 
 
 #: type-name context: ``CAST(x AS CHAR(10))`` etc. must not be rewritten
-_TYPE_CONTEXT = re.compile(r"(?i)\bas\s*$")
+_AS = re.compile(r"(?i)\bas")
+
+
+def _after_as(sql: str, i: int) -> bool:
+    """Whether ``sql[:i]`` ends in the word ``AS`` and optional whitespace.
+    Walks back over that whitespace only, not the whole prefix."""
+    while i and sql[i - 1].isspace():
+        i -= 1
+    return _AS.match(sql, i - 2, i) is not None
 
 
 def _rewrite_call(sql: str, fname: str, render) -> str:
@@ -117,7 +125,7 @@ def _rewrite_call(sql: str, fname: str, render) -> str:
     while m := pat.search(sql, pos):
         code, close = scan = scan or _scan(sql)
         i = m.end() - 1
-        if i not in close or _TYPE_CONTEXT.search(sql, 0, m.start()):
+        if i not in close or _after_as(sql, m.start()):
             pos = m.end()
             continue
         repl = render(_split_args(sql, code, close, i))

@@ -153,11 +153,17 @@ class SQLiteReader(DataSourceReader):
     def pushFilters(self, filters):  # noqa: N802 (Spark API name)
         self.pushed_sql: list[str] = []
         self.pushed_params: list = []
+        # per integer rowid filter, the rowid spans it keeps; partitions()
+        # drops the slices that miss any of them
+        self.rowid_spans: list[list[tuple[int | None, int | None]]] = []
         for f in filters:
             frag = self._translate_filter(f)
             if frag is not None:
                 self.pushed_sql.append(frag[0])
                 self.pushed_params.extend(frag[1])
+            spans = self._rowid_spans(f)
+            if spans:
+                self.rowid_spans.append(spans)
         # Everything is re-applied by Spark (superset contract above).
         return filters
 
@@ -169,20 +175,52 @@ class SQLiteReader(DataSourceReader):
         "LessThanOrEqual": "<=",
     }
 
-    def _translate_filter(self, f) -> tuple[str, list] | None:
-        """One Spark Filter -> (sql_fragment, params), or None if the
-        filter is not worth pre-evaluating inside SQLite."""
-        name = type(f).__name__
+    #: the rowid span a key comparison with integer ``v`` keeps
+    _SPANS = {
+        "EqualTo": lambda v: (v, v),
+        "GreaterThan": lambda v: (v + 1, None),
+        "GreaterThanOrEqual": lambda v: (v, None),
+        "LessThan": lambda v: (None, v - 1),
+        "LessThanOrEqual": lambda v: (None, v),
+    }
+
+    def _filter_column(self, f) -> str | None:
+        """The one column of this table that ``f`` tests, if any."""
         attr = getattr(f, "attribute", None)
         if not attr or len(attr) != 1:
             return None
         col = attr[0]
-        if col != "rowid" and col not in self.columns:
+        return col if col == "rowid" or col in self.columns else None
+
+    def _is_key(self, col: str) -> bool:
+        """rowid and its INTEGER PRIMARY KEY alias hold only integers."""
+        return col == "rowid" or (
+            col == self.rowid_alias and self.types.get(col) is SQLiteType.INT
+        )
+
+    def _rowid_spans(self, f) -> list[tuple[int | None, int | None]] | None:
+        """The closed rowid spans (None: open) an integer key filter keeps."""
+        name = type(f).__name__
+        col = self._filter_column(f)
+        if col is None or not self._is_key(col) or name not in (*self._SPANS, "In"):
             return None
+        values = f.value if name == "In" else (f.value,)
+        if not all(type(v) is int for v in values):
+            return None
+        if name == "In":
+            return [(v, v) for v in values]
+        return [self._SPANS[name](f.value)]
+
+    def _translate_filter(self, f) -> tuple[str, list] | None:
+        """One Spark Filter -> (sql_fragment, params), or None if the
+        filter is not worth pre-evaluating inside SQLite."""
+        col = self._filter_column(f)
+        if col is None:
+            return None
+        name = type(f).__name__
         q = "rowid" if col == "rowid" else f'"{col}"'
         t = SQLiteType.INT if col == "rowid" else self.types.get(col, SQLiteType.ANY)
-        # rowid and its INTEGER PRIMARY KEY alias hold only integers
-        key = t is SQLiteType.INT and col in ("rowid", self.rowid_alias)
+        key = self._is_key(col)
         dirty = f"typeof({q}) IN ('text', 'blob')"  # rows Spark must judge
         if name == "IsNotNull":
             # decoded non-null implies storage non-null for every type
@@ -231,22 +269,37 @@ class SQLiteReader(DataSourceReader):
         # core reads its own slice. The range is the one read_sql() saw;
         # the first slice is open below and the last open above, so rows
         # added outside it since are still read.
-        if self.rowid_min is not None and self.rowid_max is not None:
-            lo, hi = int(self.rowid_min), int(self.rowid_max)
-            span = hi - lo + 1
-            if self.num_partitions:
-                cap = int(self.num_partitions)
-            else:
-                # default sizing: no slice narrower than _MIN_ROWS_PER_PARTITION
-                cap = min(_DEFAULT_READ_PARTITIONS, span // _MIN_ROWS_PER_PARTITION or 1)
-            n = max(1, min(cap, span))
-            step = (span + n - 1) // n
-            cuts = [lo + i * step for i in range(1, n)]
-            return [
-                SQLiteRangePartition(a, None if b is None else b - 1)
-                for a, b in zip([None, *cuts], [*cuts, None])
-            ]
-        return [SQLiteRangePartition(None, None)]
+        if self.rowid_min is None or self.rowid_max is None:
+            return [SQLiteRangePartition(None, None)]
+        lo, hi = int(self.rowid_min), int(self.rowid_max)
+        span = hi - lo + 1
+        if self.num_partitions:
+            cap = int(self.num_partitions)
+        else:
+            # default sizing: no slice narrower than _MIN_ROWS_PER_PARTITION
+            cap = min(_DEFAULT_READ_PARTITIONS, span // _MIN_ROWS_PER_PARTITION or 1)
+        n = max(1, min(cap, span))
+        step = (span + n - 1) // n
+        cuts = [lo + i * step for i in range(1, n)]
+        slices = [
+            SQLiteRangePartition(a, None if b is None else b - 1)
+            for a, b in zip([None, *cuts], [*cuts, None])
+        ]
+        # Keep the slices that meet every pushed rowid filter. Bounds that
+        # no slice meets at once select no row; one slice then reads nothing.
+        kept = [
+            p
+            for p in slices
+            if all(
+                any(
+                    (p.lo is None or b is None or p.lo <= b)
+                    and (p.hi is None or a is None or a <= p.hi)
+                    for a, b in spans
+                )
+                for spans in getattr(self, "rowid_spans", [])
+            )
+        ]
+        return kept or slices[:1]
 
     def _query(self, partition: SQLiteRangePartition) -> tuple[str, list]:
         cols = ", ".join(f'"{c}"' if c != "rowid" else "rowid" for c in self.columns)

@@ -165,6 +165,7 @@ def test_table_read_sees_rows_outside_the_first_rowid_range(spark, db_path):
     with conn:
         conn.executemany("INSERT INTO t (v) VALUES (?)", [(i,) for i in range(30)])
     df = read_sql(spark, db_path, table="t", num_partitions=3)
+    with_rowid = read_sql(spark, db_path, table="t", columns=["rowid", "v"], num_partitions=3)
     assert df.count() == 30
     with conn:
         conn.executemany("INSERT INTO t (v) VALUES (?)", [(i,) for i in range(5)])
@@ -174,6 +175,17 @@ def test_table_read_sees_rows_outside_the_first_rowid_range(spark, db_path):
     conn.close()
     assert n == 26 and df.count() == n
     assert df.rdd.getNumPartitions() == 3
+    # rowid filters prune to the slices they meet; bounds beyond the range
+    # read_sql() saw keep the open end slices
+    for cond, rowids, parts in [
+        ("rowid > 30", [31, 32, 33, 34, 35], 1),
+        ("rowid = -7", [-7], 1),
+        ("rowid IN (-7, 35)", [-7, 35], 2),
+        ("rowid BETWEEN 12 AND 14", [12, 13, 14], 1),
+    ]:
+        pruned = with_rowid.filter(cond)
+        assert sorted(r.rowid for r in pruned.collect()) == rowids, cond
+        assert pruned.rdd.getNumPartitions() == parts, cond
 
 
 # -- write paths (reference testWriteSQL :96-111, testWriteTable :113-127,
@@ -496,6 +508,55 @@ def test_any_string_mode_unchanged(spark, tmp_path):
 # filter pushdown (r2): SQLite pre-filters a SUPERSET, Spark re-applies —
 # results must be identical to the unpushed read under every storage mess.
 # ---------------------------------------------------------------------------
+def test_partitions_prune_to_pushed_rowid_bounds():
+    """partitions() keeps the rowid slices that meet every integer filter on
+    rowid or its alias; the end slices stay open."""
+    from pyspark.sql import datasource as dsf
+
+    from sqlitedataframe_spark.sources.sqlite import SQLiteReader
+
+    def slices(*filters):
+        r = SQLiteReader(
+            {
+                "path": "/nonexistent",
+                "table": "t",
+                "columns": json.dumps(["id", "v"]),
+                "types": json.dumps({"id": "int", "v": "int"}),
+                "rowid_alias": "id",
+                "rowid_min": "1",
+                "rowid_max": "100",
+                "num_partitions": "4",
+            },
+            None,
+        )
+        if filters:
+            assert list(r.pushFilters(list(filters))) == list(filters)
+        return [(p.lo, p.hi) for p in r.partitions()]
+
+    every = [(None, 25), (26, 50), (51, 75), (76, None)]
+    assert slices() == every
+    assert slices(dsf.EqualTo(("rowid",), 30)) == [(26, 50)]
+    assert slices(dsf.EqualTo(("id",), 60)) == [(51, 75)]
+    assert slices(dsf.In(("id",), (3, 80))) == [(None, 25), (76, None)]
+    assert slices(dsf.GreaterThan(("id",), 40), dsf.LessThanOrEqual(("id",), 60)) == [
+        (26, 50),
+        (51, 75),
+    ]
+    assert slices(dsf.GreaterThanOrEqual(("rowid",), 51), dsf.LessThan(("rowid",), 76)) == [
+        (51, 75)
+    ]
+    # bounds beyond the range read_sql() saw keep that end slice
+    assert slices(dsf.GreaterThan(("rowid",), 500)) == [(76, None)]
+    assert slices(dsf.LessThan(("id",), -3)) == [(None, 25)]
+    assert slices(dsf.In(("rowid",), (-9, 900))) == [(None, 25), (76, None)]
+    # not an integer key comparison: nothing pruned
+    assert slices(dsf.EqualTo(("v",), 30)) == every
+    assert slices(dsf.GreaterThan(("rowid",), 80.5)) == every
+    assert slices(dsf.Not(dsf.EqualTo(("rowid",), 30))) == every
+    # bounds no slice meets at once select nothing: one slice remains
+    assert slices(dsf.EqualTo(("id",), 3), dsf.EqualTo(("id",), 80)) == [(None, 25)]
+
+
 def test_pushdown_translation_units():
     from pyspark.sql import datasource as dsf
 

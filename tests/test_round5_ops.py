@@ -197,15 +197,22 @@ def test_activity_streaks_hand_checked(spark):
 
 
 def test_minhash_audience_identical_and_disjoint(spark):
-    """Identical member sets -> est_jaccard 1.0; disjoint sets -> ~0."""
+    """Identical member sets -> est_jaccard 1.0; disjoint sets -> ~0;
+    half-overlapping sets (true Jaccard 0.5) -> an estimate near 0.5, which
+    only a working hash family gives."""
     from sqlitedataframe_spark.operators.sketch import (
         minhash_overlap_pairs,
         minhash_set_signatures,
     )
 
-    rows = [("a", u) for u in range(50)] + [("b", u) for u in range(50)] + [
-        ("c", u) for u in range(1000, 1050)
-    ]
+    rows = (
+        [("a", u) for u in range(50)]
+        + [("b", u) for u in range(50)]
+        + [("c", u) for u in range(1000, 1050)]
+        # 40 shared of 80 members
+        + [("d", u) for u in range(2000, 2060)]
+        + [("e", u) for u in range(2020, 2080)]
+    )
     df = spark.createDataFrame(rows, ["seg", "member"])
     sigs = minhash_set_signatures(df, "seg", "member")
     got = {
@@ -214,3 +221,4 @@ def test_minhash_audience_identical_and_disjoint(spark):
     }
     assert got[("a", "b")] == 1.0
     assert got[("a", "c")] < 0.2 and got[("b", "c")] < 0.2
+    assert 0.25 <= got[("d", "e")] <= 0.75, got[("d", "e")]

@@ -175,6 +175,10 @@ def test_rewriter_ignores_string_literals():
 def test_rewriter_ignores_char_type_in_cast():
     sql = "SELECT CAST(a AS CHAR(10)), CAST(b AS varchar(5)) FROM t"
     assert translate_sqlite_sql(sql) == sql
+    sql = "SELECT CAST(a AS\n  CHAR(10)), CAST(b as\tchar (5)) FROM t"
+    assert translate_sqlite_sql(sql) == sql
+    # a word ending in "as" is not AS: char() there is SQLite's function
+    assert translate_sqlite_sql("SELECT alias char(65)") != "SELECT alias char(65)"
 
 
 def test_unsupported_date_modifiers_pass_through():
