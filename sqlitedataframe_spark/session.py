@@ -56,12 +56,16 @@ def _skip_unchanged_zip_rereads() -> None:
         # stamp, so the next check reads again
         stamp = _zip_stamp(archive)
         files = read_directory(archive)
+        # the listing is published before its stamp, and invalidate_caches
+        # reads them in the other order: whoever sees a stamp sees its
+        # listing or a later one
+        zipimport._zip_directory_cache[archive] = files
         stamps[archive] = stamp
         return files
 
     def invalidate_caches(self):
-        files = zipimport._zip_directory_cache.get(self.archive)
         stamp = stamps.get(self.archive)
+        files = zipimport._zip_directory_cache.get(self.archive)
         if files is not None and stamp is not None and stamp == _zip_stamp(self.archive):
             self._files = files
         else:
@@ -174,9 +178,10 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     reaches executors (spark-submit --py-files).
 
     Each worker call then runs ``importlib.invalidate_caches()``, which
-    re-read this zip, ``pyspark.zip`` and the Spark core jar on every call
-    (116-229 ms). A worker that imports this package skips those re-reads
-    while the archives are unchanged: see ``_skip_unchanged_zip_rereads``.
+    before Python 3.13 re-reads this zip, ``pyspark.zip`` and the Spark core
+    jar (116-229 ms a call). A worker that has imported this package skips
+    those re-reads while the archives are unchanged: see
+    ``_skip_unchanged_zip_rereads``.
     """
     sc = spark.sparkContext
     if getattr(sc, "_sdf_pkg_shipped", False):

@@ -4,7 +4,8 @@ re-expressed on Spark 4's Python Data Source API (pure Python: no JDBC jar).
 Read path (reference A1-A7):
 - ``read_sql(spark, db, table=...)`` — lazy full-table scan through the
   ``sqlite`` data source, rowid-range partitioned so executors read disjoint
-  slices in parallel, with filter pushdown
+  slices in parallel, with filter pushdown; integer rowid filters drop the
+  slices they cannot meet
   (DataFrame.init(connection:table:), SQLiteDataFrame.swift:248-253).
 - ``read_sql(spark, db, statement=...)`` — arbitrary SQL (A2) and the
   prepared statement with ``params`` binds (A3, :346-397) are a driver
