@@ -288,18 +288,15 @@ class SQLiteReader(DataSourceReader):
         ]
         # Keep the slices that meet every pushed rowid filter. Bounds that
         # no slice meets at once select no row; one slice then reads nothing.
-        kept = [
-            p
-            for p in slices
-            if all(
-                any(
-                    (p.lo is None or b is None or p.lo <= b)
-                    and (p.hi is None or a is None or a <= p.hi)
-                    for a, b in spans
-                )
-                for spans in getattr(self, "rowid_spans", [])
+        def meets(p: SQLiteRangePartition, spans) -> bool:
+            return any(
+                (p.lo is None or b is None or p.lo <= b)
+                and (p.hi is None or a is None or a <= p.hi)
+                for a, b in spans
             )
-        ]
+
+        filters = getattr(self, "rowid_spans", [])
+        kept = [p for p in slices if all(meets(p, spans) for spans in filters)]
         return kept or slices[:1]
 
     def _query(self, partition: SQLiteRangePartition) -> tuple[str, list]:
